@@ -112,12 +112,14 @@ object ImporterCli {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     ImportJob.write(results, args.outputDir,
       writeMode = if (args.incremental && anySkipped) "append" else "overwrite")
-    val quarantined = ImportJob.quarantine(results)
-    val nQuarantined = quarantined.count()
+    // both counts in one aggregate over the persisted results
+    val counts = results.agg(count(lit(1)), count(col("error"))).head()
+    val (nResults, nQuarantined) = (counts.getLong(0), counts.getLong(1))
     if (nQuarantined > 0)
-      quarantined.write.mode("append").json(s"${args.outputDir}/quarantine")
+      ImportJob.quarantine(results)
+        .write.mode("append").json(s"${args.outputDir}/quarantine")
     val summary = Summary(handles.size, selected.size, selected.size - todo.size,
-      results.count() - nQuarantined, nQuarantined)
+      nResults - nQuarantined, nQuarantined)
     results.unpersist()
     summary
   }
@@ -126,8 +128,7 @@ object ImporterCli {
     val args = parseArgs(argv)
     val spark = SparkSession.builder()
       .appName(s"graft-import-${args.format}")
-      .config("spark.sql.shuffle.partitions",
-        SparkSession.getActiveSession.map(_ => "32").getOrElse("32"))
+      .config("spark.sql.shuffle.partitions", "32")
       .getOrCreate()
     val s = run(spark, args)
     // stdout summary stands in for the reference's logger output

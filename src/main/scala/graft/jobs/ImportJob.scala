@@ -111,32 +111,24 @@ object ImportJob {
     // cache and are independent of each other — distinct sinks, no
     // shared shuffle — so they run CONCURRENTLY and one write's task
     // tail back-fills with the other's tasks (guide §2.6)
-    issues.filter(size(col("violations")) > 0)
-      .select(col("issue_id"), col("issue_id").as("doc_id"),
-        col("violations"), col("json"))
-      .unionByName(pages.filter(size(col("violations")) > 0)
-        .select(col("issue_id"), col("doc_id"), col("violations"), col("json")))
-      .write.mode(writeMode).json(s"$outPath/failed")
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val writes = Seq(
-      Future {
-        partitioned(issues.filter(size(col("violations")) === 0)
+    try {
+      issues.filter(size(col("violations")) > 0)
+        .select(col("issue_id"), col("issue_id").as("doc_id"),
+          col("violations"), col("json"))
+        .unionByName(pages.filter(size(col("violations")) > 0)
+          .select(col("issue_id"), col("doc_id"), col("violations"), col("json")))
+        .write.mode(writeMode).json(s"$outPath/failed")
+      graft.util.Par.all(
+        () => partitioned(issues.filter(size(col("violations")) === 0)
           .select(col("issue_id"), col("json")))
           .write.mode(writeMode).partitionBy("alias", "year")
           .option("partitionOverwriteMode", "dynamic")
-          .option("compression", "bzip2").text(s"$outPath/issues")
-      },
-      Future {
-        partitioned(pages.filter(size(col("violations")) === 0)
+          .option("compression", "bzip2").text(s"$outPath/issues"),
+        () => partitioned(pages.filter(size(col("violations")) === 0)
           .select(col("issue_id"), col("json")))
           .write.mode(writeMode).partitionBy("alias", "year")
           .option("partitionOverwriteMode", "dynamic")
-          .option("compression", "bzip2").text(s"$outPath/pages")
-      })
-    Await.result(Future.sequence(writes), Duration.Inf)
-    ok.unpersist()
+          .option("compression", "bzip2").text(s"$outPath/pages"))
+    } finally ok.unpersist()
   }
 }

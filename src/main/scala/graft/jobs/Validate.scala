@@ -49,7 +49,14 @@ object Validate {
     * NARROWER than the rebuild's full pageSchema (token text and
     * style fields are dropped): `from_json` still tokenizes the whole
     * document but materializes only schema fields, and the validation
-    * parse was the import pipeline's hottest expression. */
+    * parse was the import pipeline's hottest expression.
+    *
+    * Divergence from the reference: a type error in a dropped token
+    * field (say a string-valued style id `s`, or a non-boolean `hy`)
+    * is NOT flagged, since `from_json` never materializes that field.
+    * Such a page passes as valid and is written to the canonical
+    * output, where the reference's full-schema check would send it to
+    * the failed log. */
   private val pageValSchema: StructType = StructType(Seq(
     StructField("id", StringType),
     StructField("r", ArrayType(StructType(Seq(

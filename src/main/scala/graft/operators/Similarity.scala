@@ -1030,24 +1030,18 @@ object Similarity {
     // explode. The stats write stays sequenced after the index write
     // it reads back. Measured at sf0.1 the three sequential writes
     // were pure job-count wall (16 jobs, 5.4 s executor in a 3.2 s row).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val vecsW = Future {
-      Bucketing.writeBucketed(base, s"${table}_vecs", "vec_id",
-        nBuckets, Seq("vec_id"))
-    }
-    val indexW = Future {
-      Bucketing.writeBucketed(
-        base.select(col("vec_id"), posexplode(keys).as(Seq("band", "key"))),
-        table, "key", nBuckets, Seq("key"))
-      Bucketing.writeBucketed(
-        df.sparkSession.table(table).groupBy(col("band"), col("key"))
-          .agg(count(lit(1)).as("n")),
-        s"${table}_stats", "key", nBuckets, Seq("key"))
-    }
-    Await.result(Future.sequence(Seq(vecsW, indexW)), Duration.Inf)
+    graft.util.Par.all(
+      () => Bucketing.writeBucketed(base, s"${table}_vecs", "vec_id",
+        nBuckets, Seq("vec_id")),
+      () => {
+        Bucketing.writeBucketed(
+          base.select(col("vec_id"), posexplode(keys).as(Seq("band", "key"))),
+          table, "key", nBuckets, Seq("key"))
+        Bucketing.writeBucketed(
+          df.sparkSession.table(table).groupBy(col("band"), col("key"))
+            .agg(count(lit(1)).as("n")),
+          s"${table}_stats", "key", nBuckets, Seq("key"))
+      })
   }
 
   /** Bucket-population telemetry for a [[writeRhpIndex]] table — one

@@ -83,6 +83,32 @@ class ImportJobSpec extends AnyFunSuite {
     assert(pages.length == 1 && pages.head.contains("-p0001"))
   }
 
+  test("a failed sink write joins its sibling and releases the cache") {
+    import spark.implicits._
+    val results = spark.createDataset((1 to 8).map { d =>
+      val id = f"kbx-1900-01-$d%02d-a"
+      ImportJob.ImportResult(id,
+        Some(s"""{"id":"$id","cdt":"2020-01-01 00:00:00","pp":["$id-p0001"],""" +
+          s""""i":[{"m":{"id":"$id-i0001","tp":"article","pp":[1]}}]}"""),
+        Seq((s"$id-p0001", s"""{"id":"$id-p0001","cc":true,"r":[]}""")), None)
+    })
+    val out = java.nio.file.Files.createTempDirectory("fail-out")
+    // the issues sink's target is a plain file: that write fails
+    java.nio.file.Files.write(out.resolve("issues"), "a file".getBytes)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](ImportJob.write(results, out.toString))
+    // the concurrent pages write was joined, not left running detached:
+    // it has committed (no staging dir left) by the time write throws
+    val pagesOut = java.nio.file.Files.walk(out.resolve("pages")).toArray
+      .map(_.toString)
+    assert(!pagesOut.exists(_.contains(".spark-staging")),
+      pagesOut.mkString("\n"))
+    assert(pagesOut.exists(_.endsWith(".txt.bz2")), pagesOut.mkString("\n"))
+    assert(spark.read.text(out.resolve("pages").toString).count() == 8)
+    // and the write's cache of the parsed results is released
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+  }
+
   test("BNF-EN runs through the same generic job") {
     val refs = BnfEnImporter.detectIssues(
       "/root/reference/text_preparation/data/sample_data/BNF-EN",

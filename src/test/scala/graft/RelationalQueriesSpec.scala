@@ -12,6 +12,10 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a Hadoop setting submitted through the SparkConf, the way
+      // deployments pass fs credentials (FsWalkSpec checks that tasks
+      // see it)
+      .config("spark.hadoop.graft.spec.marker", "from-sparkconf")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
