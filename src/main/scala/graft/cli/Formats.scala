@@ -10,17 +10,16 @@ import graft.parse._
   *
   * A handle closes over its format-typed ref and exposes the canonical
   * (alias, date, edition) triple for config selection plus a
-  * `(cdt, ts) => parsed` thunk; handles are broadcast to executors by
-  * [[graft.jobs.ImportJob.run]], so the closures must stay serializable
-  * (they capture only the ref case classes and importer objects).
+  * `(cdt, ts) => ParsedIssue` thunk; handles are broadcast to executors
+  * by [[graft.jobs.ImportJob.run]], so the closures must stay
+  * serializable (they capture only the ref case class and the
+  * importer's `parseIssue`).
   */
 object Formats {
 
   final case class IssueHandle(
       alias: String, date: String, edition: String,
-      parse: (String, String) => (String, String, Seq[(String, String)])) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      parse: (String, String) => ParsedIssue) extends IssueKey
 
   /** Formats whose inputs are a plain directory walk. */
   val names: Seq[String] = Seq("lux", "olive", "rero", "swa", "bnf",
@@ -36,83 +35,48 @@ object Formats {
   def detect(format: String, inputDir: String,
       opts: Map[String, String] = Map.empty): Seq[IssueHandle] =
     format match {
-      case "lux" => LuxImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-          val p = LuxImporter.parseIssue(r, c, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
-      case "olive" => OliveImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-          val p = OliveImporter.parseIssue(r, c, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
-      case "rero" => ReroImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-          val p = ReroImporter.parseIssue(r, c, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
-      case "swa" => SwaImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-          val p = SwaImporter.parseIssue(r, c, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
-      case "bnf" => BnfImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-          val p = BnfImporter.parseIssue(r, c, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
+      case "lux" => handles(LuxImporter.detectIssues(inputDir))(
+        LuxImporter.parseIssue)
+      case "olive" => handles(OliveImporter.detectIssues(inputDir))(
+        OliveImporter.parseIssue(_, _, _))
+      case "rero" => handles(ReroImporter.detectIssues(inputDir))(
+        ReroImporter.parseIssue)
+      case "swa" => handles(SwaImporter.detectIssues(inputDir))(
+        SwaImporter.parseIssue)
+      case "bnf" => handles(BnfImporter.detectIssues(inputDir))(
+        BnfImporter.parseIssue)
       case "bnf_en" =>
         val arks = opts.get("ark-file").map { f =>
           new String(graft.util.FsWalk.readBytes(f), "utf-8")
             .split("\r?\n").iterator
             .map(_.split("\t")).collect { case Array(k, v) => k -> v }.toMap
         }.getOrElse(Map.empty[String, String])
-        BnfEnImporter.detectIssues(inputDir, arks).map { r =>
-          IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-            val p = BnfEnImporter.parseIssue(r, c, t)
-            (p.issueId, p.issueJson, p.pageJsons) })
-        }
-      case "bcul" => BculImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-          val p = BculImporter.parseIssue(r, c, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
-      case "bl" => BlImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-          val p = BlImporter.parseIssue(r, c, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
-      case "tetml" => TetmlImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-          val p = TetmlImporter.parseIssue(r, c, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
-      case "fedgaz" => FedgazImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-          val p = FedgazImporter.parseIssue(r, c, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
-      case "ina" => InaImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (_, t) => {
-          val p = InaImporter.parseIssue(r, t)
-          (p.issueId, p.issueJson, p.recordJsons) })
-      }
-      case "swissinfo" => SwissInfoImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (_, t) => {
-          val p = SwissInfoImporter.parseIssue(r, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
-      case "onb" => OnbImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-          val p = OnbImporter.parseIssue(r, c, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
-      case "kb" => KbImporter.detectIssues(inputDir).map { r =>
-        IssueHandle(r.alias, r.date, r.edition, (c, t) => {
-          val p = KbImporter.parseIssue(r, c, t)
-          (p.issueId, p.issueJson, p.pageJsons) })
-      }
+        handles(BnfEnImporter.detectIssues(inputDir, arks))(
+          BnfEnImporter.parseIssue)
+      case "bcul" => handles(BculImporter.detectIssues(inputDir))(
+        BculImporter.parseIssue(_, _, _))
+      case "bl" => handles(BlImporter.detectIssues(inputDir))(
+        BlImporter.parseIssue)
+      case "tetml" => handles(TetmlImporter.detectIssues(inputDir))(
+        TetmlImporter.parseIssue)
+      case "fedgaz" => handles(FedgazImporter.detectIssues(inputDir))(
+        FedgazImporter.parseIssue)
+      case "ina" => handles(InaImporter.detectIssues(inputDir))(
+        (r, _, t) => InaImporter.parseIssue(r, t))
+      case "swissinfo" => handles(SwissInfoImporter.detectIssues(inputDir))(
+        (r, _, t) => SwissInfoImporter.parseIssue(r, t))
+      case "onb" => handles(OnbImporter.detectIssues(inputDir))(
+        OnbImporter.parseIssue)
+      case "kb" => handles(KbImporter.detectIssues(inputDir))(
+        KbImporter.parseIssue)
       case other => throw new IllegalArgumentException(
         s"unknown format '$other' (expected one of ${names.mkString(", ")})")
     }
+
+  /** One handle per ref; `parse(ref, cdt, ts)` is the format's
+    * `parseIssue`. */
+  private def handles[R <: IssueKey](refs: Seq[R])(
+      parse: (R, String, String) => ParsedIssue): Seq[IssueHandle] =
+    refs.map(r => IssueHandle(r.alias, r.date, r.edition,
+      (cdt, ts) => parse(r, cdt, ts)))
 }

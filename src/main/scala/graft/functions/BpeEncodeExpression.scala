@@ -11,7 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * [[graft.operators.Bpe.bpeEncode]]'s declarative form applies each
   * of the K trained merges as its own nested `transform`+`aggregate`
-  * HOF pass: the round-12 sf0.1 profile (BpeScratch) measured the
+  * HOF pass: the round-12 sf0.1 profile (BENCH_NOTES.md, "b2 native
+  * merge-fold") measured the
   * baseline char-split scan at 0.87 s and each added merge at ~1 s —
   * the expression tree (and the plan's cost) grows LINEARLY with K,
   * and every fold step re-allocates the accumulator array, so a

@@ -1,6 +1,9 @@
 package graft.jobs
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+
+import graft.parse.ParsedIssue
 
 /** Generic distributed import: any format's (detect, parse) pair runs
   * as one Spark pipeline — the role of the reference's
@@ -11,9 +14,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * refs ship to executors (broadcast of the descriptor list, an index
   * Dataset for partitioning) and each issue parses in a task. A corrupt
   * issue becomes a quarantine row, never a job failure (core.py:110-146
-  * dir2issue's per-item try/except). Format-specific jobs
-  * ([[LuxImportJob]] etc.) remain for their extra surfaces; new formats
-  * need only this.
+  * dir2issue's per-item try/except). Every format imports through
+  * this one path: [[graft.cli.Formats.detect]] supplies the refs and
+  * their parse, [[write]] and [[quarantine]] sink the results.
   */
 object ImportJob {
 
@@ -25,11 +28,11 @@ object ImportJob {
 
   /** @param refs   driver-detected issue descriptors (any type).
     * @param idOf   canonical issue id of a descriptor (for quarantine).
-    * @param parse  ref → (issueId, issueJson, page/record JSONs);
-    *               exceptions quarantine the single issue.
+    * @param parse  ref → its [[ParsedIssue]]; exceptions quarantine
+    *               the single issue.
     */
   def run[R](spark: SparkSession, refs: Seq[R], idOf: R => String,
-      parse: R => (String, String, Seq[(String, String)])): Dataset[ImportResult] = {
+      parse: R => ParsedIssue): Dataset[ImportResult] = {
     import spark.implicits._
     val refsB = spark.sparkContext.broadcast(refs.toIndexedSeq)
     val parallelism = math.max(1, math.min(refs.size,
@@ -39,8 +42,8 @@ object ImportJob {
       .map { i =>
         val ref = refsB.value(i)
         try {
-          val (id, issueJson, pages) = parse(ref)
-          ImportResult(id, Some(issueJson), pages, None)
+          val p = parse(ref)
+          ImportResult(p.issueId, Some(p.issueJson), p.pageJsons, None)
         } catch {
           case e: Exception =>
             ImportResult(idOf(ref), None, Nil,
@@ -70,11 +73,21 @@ object ImportJob {
     *             run adds new part files). Overwrites are dynamic —
     *             only the (alias, year) partitions actually written are
     *             replaced, so re-importing one alias never wipes the
-    *             others' output. */
+    *             others' output.
+    *
+    * `issues/_SUCCESS` and `pages/_SUCCESS` mark a complete store:
+    * both are removed before the writes and created only once both
+    * partitioned writes have committed (a dynamic overwrite commits
+    * through a staging dir and leaves no marker of its own). */
   def write(results: Dataset[ImportResult], outPath: String,
       writeMode: String = "overwrite"): Unit = {
     import org.apache.spark.sql.functions._
     import results.sparkSession.implicits._
+    val markers = Seq("issues", "pages").map(d =>
+      new Path(s"$outPath/$d/_SUCCESS"))
+    val fs = markers.head.getFileSystem(
+      results.sparkSession.sparkContext.hadoopConfiguration)
+    markers.foreach(fs.delete(_, false))
     // three write actions follow; without a persist each would re-run
     // the full XML parse of every issue (the dominant cost at scale) —
     // the same reuse point the reference persists its issue bag at
@@ -129,6 +142,7 @@ object ImportJob {
           .write.mode(writeMode).partitionBy("alias", "year")
           .option("partitionOverwriteMode", "dynamic")
           .option("compression", "bzip2").text(s"$outPath/pages"))
+      markers.foreach(fs.create(_, true).close())
     } finally ok.unpersist()
   }
 }

@@ -44,9 +44,7 @@ object BculImporter {
   }
 
   case class IssueRef(alias: String, date: String, edition: String,
-      path: String, mitFileType: String) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      path: String, mitFileType: String) extends IssueKey
 
   def findMitFile(dir: String): Option[FsWalk.Dir] =
     FsWalk.files(dir)
@@ -192,9 +190,6 @@ object BculImporter {
   }
 
   // ---- issue parse ----
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
 
   private def loadXml(f: FsWalk.Dir): Elem =
     if (f.name.endsWith("bz2")) {

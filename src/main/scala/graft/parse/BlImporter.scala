@@ -22,9 +22,7 @@ object BlImporter {
   val IiifEndpoint = "https://impresso-project.ch/api/proxy/iiif/"
 
   case class IssueRef(alias: String, date: String, edition: String,
-      path: String) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      path: String) extends IssueKey
 
   /** `<base>/<blip-batch>/<nlp-id>/<year>/<MMDD>` (detect.py:129-196). */
   def detectIssues(baseDir: String): Seq[IssueRef] = {
@@ -83,9 +81,6 @@ object BlImporter {
     it.find(a => a.key == name ||
       (a.prefixedKey != null && a.prefixedKey == name)).map(_.value.text)
   }
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
 
   private case class Part(role: Option[String], id: String, fileId: String,
       pageNo: Int)

@@ -47,9 +47,7 @@ object BnfEnImporter {
     Map(1 -> "a", 2 -> "b", 3 -> "c", 4 -> "d", 5 -> "e")
 
   case class IssueRef(alias: String, date: String, edition: String,
-      path: String, arkLink: String) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      path: String, arkLink: String) extends IssueKey
 
   private def attr(n: Node, name: String): Option[String] =
     n.attribute(name).map(_.text)
@@ -123,9 +121,6 @@ object BnfEnImporter {
       .filter(d => (d ne div) &&
         attr(d, "TYPE").exists(t => ContentTypes.contains(t.toLowerCase)))
       .sortBy(d => attr(d, "ID").getOrElse("").toLowerCase)
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
 
   def parseIssue(ref: IssueRef, cdt: String, ts: String): ParsedIssue = {
     val metsFile = FsWalk.files(ref.path)

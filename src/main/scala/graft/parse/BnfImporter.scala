@@ -41,9 +41,7 @@ object BnfImporter {
     "article" -> "article", "freead" -> "ad")
 
   case class IssueRef(alias: String, date: String, edition: String,
-      path: String, secondaryDate: Option[String]) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      path: String, secondaryDate: Option[String]) extends IssueKey
 
   private def attr(n: Node, name: String): Option[String] =
     n.attribute(name).map(_.text)
@@ -139,9 +137,6 @@ object BnfImporter {
         Part(role, attr(area, "BEGIN"), fileId, fileId.split("\\.")(1).toInt)
       }
     }
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
 
   def parseIssue(ref: IssueRef, cdt: String, ts: String): ParsedIssue = {
     val uid = FsWalk.baseName(ref.path)

@@ -57,9 +57,6 @@ object FedgazImporter {
     }.toMap
   }
 
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
-
   private val mapper = new ObjectMapper()
 
   def detectIssues(baseDir: String): Seq[TetmlImporter.IssueRef] =

@@ -30,9 +30,7 @@ object InaImporter {
   val MetadataFilename = "ina_metadata.json"
 
   case class IssueRef(alias: String, date: String, edition: String,
-      path: String, metadataFile: String) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      path: String, metadataFile: String) extends IssueKey
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -139,9 +137,6 @@ object InaImporter {
       Some(f"${secs / 3600}%02d:${secs % 3600 / 60}%02d:${secs % 60}%02d")
     } catch { case _: Exception => None }
   }
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      recordJsons: Seq[(String, String)])
 
   def parseIssue(ref: IssueRef, ts: String): ParsedIssue = {
     val notes = mutable.ArrayBuffer.empty[String]

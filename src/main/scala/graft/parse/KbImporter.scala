@@ -36,9 +36,7 @@ object KbImporter {
     "illustratie met onderschrift" -> "image")
 
   case class IssueRef(alias: String, date: String, edition: String,
-      path: String) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      path: String) extends IssueKey
 
   private def attrCI(n: Node, name: String): Option[String] =
     n.attributes.asAttrMap.collectFirst {
@@ -86,9 +84,6 @@ object KbImporter {
   private case class Zone(pageNo: Int, articleNum: Int, box: Seq[Int])
   private case class KbArticle(num: Int, recordId: String,
       title: Option[String], subject: Option[String], ocrFile: Option[String])
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
 
   def parseIssue(ref: IssueRef, cdt: String, ts: String): ParsedIssue = {
     val didl = loadDidl(FsWalk.child(ref.path, "didl.xml"))

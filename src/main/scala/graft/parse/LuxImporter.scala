@@ -28,9 +28,7 @@ object LuxImporter {
   val EditionsMappings = Map(1 -> "a", 2 -> "b", 3 -> "c", 4 -> "d", 5 -> "e")
 
   /** Work-unit descriptor (lux/detect.py LuxIssueDir). */
-  case class IssueRef(alias: String, date: String, edition: String, path: String) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+  case class IssueRef(alias: String, date: String, edition: String, path: String) extends IssueKey
 
   /** `<base>/<batch>/<dir with "newspaper">` → IssueRef (detect.py:38-85). */
   def dirToIssue(path: String): IssueRef = {
@@ -151,11 +149,6 @@ object LuxImporter {
       .filterNot(t => t == "body" || t == "body_content")
     !types.forall(nonArticle.contains)
   }
-
-  case class ParsedIssue(
-      issueId: String,
-      issueJson: String,
-      pageJsons: Seq[(String, String)]) // (pageId, json)
 
   /** Parse one issue directory end-to-end: mets + all ALTO pages.
     * Throws on unrecoverable structural problems — callers wrap in Either

@@ -83,9 +83,7 @@ object OliveImporter {
     (n \\ "_").filter(_.label.equalsIgnoreCase(label))
 
   case class IssueRef(alias: String, date: String, edition: String,
-      path: String) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      path: String) extends IssueKey
 
   def detectIssues(baseDir: String): Seq[IssueRef] = {
     for {
@@ -336,9 +334,6 @@ object OliveImporter {
   }
 
   // ---- issue parse ----
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
 
   /** Per-page image-info enrichment record (`image-info.json` entries:
     * {pg, strat, s} — olive/classes.py:449-468). */

@@ -23,9 +23,7 @@ import graft.util.Json._
 object OnbImporter {
 
   case class IssueRef(alias: String, date: String, edition: String,
-      path: String) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      path: String) extends IssueKey
 
   private def dirs(path: String): Seq[FsWalk.Dir] = FsWalk.subdirs(path)
 
@@ -56,9 +54,6 @@ object OnbImporter {
       case _ => dirs(baseDir).flatMap(d => walkRoots(d.path))
     }
   }
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
 
   def parseIssue(ref: IssueRef, cdt: String, ts: String): ParsedIssue = {
     val issueNotes = scala.collection.mutable.ArrayBuffer.empty[String]

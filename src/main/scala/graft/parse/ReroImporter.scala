@@ -24,9 +24,7 @@ object ReroImporter {
   val EditionsMappings = Map(1 -> "a", 2 -> "b", 3 -> "c", 4 -> "d", 5 -> "e")
 
   case class IssueRef(alias: String, date: String, edition: String,
-      path: String) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      path: String) extends IssueKey
 
   /** `<base>/<journal>/data/<ALIAS>/<yyyymmdd_ed>` (detect.py:39-85). */
   def detectIssues(baseDir: String): Seq[IssueRef] = {
@@ -69,9 +67,6 @@ object ReroImporter {
           fileId.replace("ALTO", "").toInt)
       }
     }
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
 
   def parseIssue(ref: IssueRef, cdt: String, ts: String): ParsedIssue = {
     val metsFile = FsWalk.files(ref.path)

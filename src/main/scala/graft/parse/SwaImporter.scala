@@ -23,9 +23,7 @@ object SwaImporter {
   val IiifPresBase = "https://ub-iiifpresentation.ub.unibas.ch/impresso_sb"
 
   case class IssueRef(alias: String, date: String, edition: String,
-      archivePath: String, pages: Seq[(String, String)]) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      archivePath: String, pages: Seq[(String, String)]) extends IssueKey
 
   /** Rows of the impresso ids CSV (detect.py header):
     * manifest_id, identifier_impresso, filename, xml_file, full_xml_path,
@@ -78,9 +76,6 @@ object SwaImporter {
           else None
       }
     }
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
 
   def parseIssue(ref: IssueRef, cdt: String, ts: String): ParsedIssue =
     FsWalk.withLocalFile(ref.archivePath) { local =>

@@ -42,9 +42,7 @@ object SwissInfoImporter {
   val Sm = "typescript"
 
   case class IssueRef(alias: String, date: String, edition: String,
-      path: String, metadataFile: String) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      path: String, metadataFile: String) extends IssueKey
 
   private val mapper = new ObjectMapper()
 
@@ -159,9 +157,6 @@ object SwissInfoImporter {
     val y2 = all.map(_(3)).max.toInt
     Seq(x1, y1, x2 - x1, y2 - y1)
   }
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
 
   def parseIssue(ref: IssueRef, ts: String): ParsedIssue = {
     val issueNotes = mutable.ArrayBuffer.empty[String]

@@ -29,9 +29,7 @@ object TetmlImporter {
   val FilterWords = Set("#", "ST", "#ST", "ST#", "#ST#")
 
   case class IssueRef(alias: String, date: String, edition: String,
-      path: String) {
-    def issueId: String = s"$alias-$date-$edition"
-  }
+      path: String) extends IssueKey
 
   def detectIssues(baseDir: String): Seq[IssueRef] =
     for {
@@ -195,9 +193,6 @@ object TetmlImporter {
       (if (t.hy) Seq("hy" -> (JBool(true): JValue)) else Nil) ++
       t.nf.map(v => "nf" -> (JStr(v): JValue)) ++
       (if (t.gn) Seq("gn" -> (JBool(true): JValue)) else Nil))
-
-  case class ParsedIssue(issueId: String, issueJson: String,
-      pageJsons: Seq[(String, String)])
 
   def parseIssue(ref: IssueRef, cdt: String, ts: String): ParsedIssue = {
     val files = FsWalk.walkFiles(ref.path)

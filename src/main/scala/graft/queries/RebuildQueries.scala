@@ -49,7 +49,7 @@ object RebuildQueries {
     * issue ids; PPN `graft1` makes every issue share the alias
     * `kbgraft1` while years vary — the partitioned write writes real
     * multi-partition output. */
-  private def writeKbIssue(base: java.nio.file.Path, docId: Long,
+  private[graft] def writeKbIssue(base: java.nio.file.Path, docId: Long,
       text: String): Unit = {
     val n = docId / 10
     val day = 1 + n % 28
@@ -252,7 +252,7 @@ object RebuildQueries {
     // import): synthesize a KB DIDL issue tree on disk from
     // `documents` (one issue/page/article per 10th document, the
     // first 20 whitespace tokens as ALTO strings), then run the REAL
-    // chain — KbImporter.detectIssues directory walk → generic
+    // chain — Formats.detect("kb") directory walk → generic
     // ImportJob.run XML parse → quarantine (must stay empty: a lost
     // issue is a missing oracle row) → validated partitioned bz2
     // write → declared-schema read-back → rebuildSolr — and emit
@@ -261,7 +261,6 @@ object RebuildQueries {
     // end under the driver's check.
     "i1_import_pipeline" -> ((s, d) => {
       import graft.jobs.ImportJob
-      import graft.parse.KbImporter
       val docs = Tables.documents(s, d)
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))
@@ -274,12 +273,9 @@ object RebuildQueries {
       java.util.Arrays.stream(docs).parallel().forEach { r =>
         writeKbIssue(base, r.getLong(0), r.getString(1))
       }
-      val refs = KbImporter.detectIssues(base.toString)
-      val results = ImportJob.run[KbImporter.IssueRef](s, refs,
-        _.issueId,
-        r => { val p = KbImporter.parseIssue(r,
-          "2020-01-01 00:00:00", "2020-01-01 00:00:00")
-          (p.issueId, p.issueJson, p.pageJsons) })
+      val results = ImportJob.run[graft.cli.Formats.IssueHandle](s,
+        graft.cli.Formats.detect("kb", base.toString), _.issueId,
+        _.parse("2020-01-01 00:00:00", "2020-01-01 00:00:00"))
       val out = java.nio.file.Files.createTempDirectory("i1-out").toString
       ImportJob.write(results, out)
       val issues = RebuildJob.readIssues(s, s"$out/issues")

@@ -50,6 +50,14 @@ object ScaleQueries {
       |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
       |        FROM documents))""".stripMargin
 
+  /** Runs `body` with `desc` as this thread's Spark job description,
+    * cleared afterwards: the [[graft.util.Par.all]] threads outlive
+    * the row and would label later jobs. */
+  private def described[T](s: SparkSession, desc: String)(body: => T): T = {
+    s.sparkContext.setJobDescription(desc)
+    try body finally s.sparkContext.setJobDescription(null)
+  }
+
   /** Shared d5/d7/d9 candidate pairs: word-3-gram Jaccard >= 0.7. */
   private def docPairs(s: SparkSession, d: String): DataFrame =
     Dedup.ngramJaccardPairs(Tables.documents(s, d), "doc_id", "text",
@@ -919,31 +927,22 @@ object ScaleQueries {
       // exact and sampled counts are independent multi-action chains —
       // overlap them (guide §2.6); each is deterministic, so the
       // emitted row is unchanged
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(pool)
-      try {
-        val fExact = Future {
-          s.sparkContext.setJobDescription("g4: exact count")
+      val Seq(exact, approx) = graft.util.Par.all(
+        () => described(s, "g4: exact count") {
           Graph.triangleCount(e, "s1", "s2")
             .agg((sum(col("n_triangles")) / 3).cast("bigint")
               .as("exact_triangles"))
-        }
-        val fApprox = Future {
-          s.sparkContext.setJobDescription("g4: doulion estimate")
+        },
+        () => described(s, "g4: doulion estimate") {
           Graph.triangleCountApprox(e, "s1", "s2", p = 0.5, seed = "g4")
-        }
-        Await.result(fApprox, Duration.Inf)
-          .crossJoin(Await.result(fExact, Duration.Inf))
-          .select(col("exact_triangles"), col("sampled_edges"),
-            col("sampled_triangles"), col("est_triangles"),
-            (abs(col("est_triangles") - col("exact_triangles"))
-              .cast("double") <=
-              col("exact_triangles").cast("double") * lit(0.25))
-              .as("within_25pct"))
-      } finally pool.shutdown()
+        })
+      approx.crossJoin(exact)
+        .select(col("exact_triangles"), col("sampled_edges"),
+          col("sampled_triangles"), col("est_triangles"),
+          (abs(col("est_triangles") - col("exact_triangles"))
+            .cast("double") <=
+            col("exact_triangles").cast("double") * lit(0.25))
+            .as("within_25pct"))
     }),
 
     // G5 — connected components as a first-class graph row: the
@@ -1463,42 +1462,33 @@ object ScaleQueries {
       val docs = Tables.documents(s, d)
       // The four tokenizer families (and the shared word count) are
       // INDEPENDENT train→encode→sum chains of many small driver
-      // actions each; run them as overlapping Spark jobs from a small
-      // thread pool (guide §2.6) so one chain's scheduling gaps are
+      // actions each; run them as overlapping Spark jobs (Par.all,
+      // guide §2.6) so one chain's scheduling gaps are
       // back-filled by another's tasks. Each chain is deterministic in
       // isolation, so the result table is byte-identical to the
       // sequential evaluation.
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(pool)
-      try {
-        val fWords = Future {
-          s.sparkContext.setJobDescription("b11: word count")
+      val Seq(nWords, nChar, nByte, nUni, nWp) = graft.util.Par.all(
+        () => described(s, "b11: word count") {
           docs.select(explode(filter(
               split(trim(col("text")), "\\s+"), w => w =!= "")).as("w"))
             .count()
-        }
-        val fChar = Future {
-          s.sparkContext.setJobDescription("b11: char bpe")
+        },
+        () => described(s, "b11: char bpe") {
           val mc = graft.operators.Bpe.bpeMerges(docs, "text", 4)
             .orderBy(col("rank")).collect()
             .map(r => (r.getString(1), r.getString(2))).toSeq
           graft.operators.Bpe.bpeEncode(docs.select("text"), "text", mc)
             .agg(sum(size(col("tokens")))).head().getLong(0)
-        }
-        val fByte = Future {
-          s.sparkContext.setJobDescription("b11: byte bpe")
+        },
+        () => described(s, "b11: byte bpe") {
           val mb = graft.operators.Bpe.bpeMergesBytes(docs, "text", 4)
             .orderBy(col("rank")).collect()
             .map(r => (r.getString(1), r.getString(2))).toSeq
           graft.operators.Bpe.bpeEncodeBytes(
               docs.select("text"), "text", mb)
             .agg(sum(size(col("tokens")))).head().getLong(0)
-        }
-        val fUni = Future {
-          s.sparkContext.setJobDescription("b11: unigram")
+        },
+        () => described(s, "b11: unigram") {
           val seed = graft.operators.Bpe.unigramSeed(docs, "text",
             seedSize = 200).collect()
           val total = seed.map(_.getLong(1)).sum.toDouble
@@ -1507,27 +1497,22 @@ object ScaleQueries {
             .toSeq
           graft.operators.Bpe.unigramEncode(docs, "text", uv)
             .agg(sum(size(col("pieces")))).head().getLong(0)
-        }
-        val fWp = Future {
-          s.sparkContext.setJobDescription("b11: wordpiece")
+        },
+        () => described(s, "b11: wordpiece") {
           val mw = graft.operators.Bpe.wordpieceMerges(docs, "text", 4)
             .orderBy(col("rank")).collect().map(_.getString(3)).toSeq
           val wv = graft.operators.Bpe.wordpieceVocab(docs, "text", mw)
           graft.operators.Bpe.wordpieceEncode(
               docs.select("text"), "text", wv)
             .agg(sum(size(col("tokens")))).head().getLong(0)
-        }
-        val nWords = Await.result(fWords, Duration.Inf)
-        def fert(t: Long): Long =
-          math.floor(t.toDouble / nWords.toDouble * 1e6).toLong
-        Seq(("bpe_byte", Await.result(fByte, Duration.Inf)),
-            ("bpe_char", Await.result(fChar, Duration.Inf)),
-            ("unigram", Await.result(fUni, Duration.Inf)),
-            ("wordpiece", Await.result(fWp, Duration.Inf)))
-          .map { case (n, t) => (n, nWords, t, fert(t)) }
-          .toDF("tokenizer", "n_words", "n_tokens", "fertility_e6")
-          .orderBy(col("tokenizer"))
-      } finally pool.shutdown()
+        })
+      def fert(t: Long): Long =
+        math.floor(t.toDouble / nWords.toDouble * 1e6).toLong
+      Seq(("bpe_byte", nByte), ("bpe_char", nChar), ("unigram", nUni),
+          ("wordpiece", nWp))
+        .map { case (n, t) => (n, nWords, t, fert(t)) }
+        .toDF("tokenizer", "n_words", "n_tokens", "fertility_e6")
+        .orderBy(col("tokenizer"))
     }),
 
     // B12 — PERSISTED byte-BPE model: train, ship the merge table as

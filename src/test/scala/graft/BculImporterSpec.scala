@@ -4,7 +4,8 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.jobs.BculImportJob
+import graft.cli.Formats
+import graft.jobs.ImportJob
 import graft.parse.BculImporter
 
 /** Golden-output tests for the BCUL (ABBYY) importer against the
@@ -28,8 +29,9 @@ class BculImporterSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
 
   private lazy val results =
-    BculImportJob.run(spark, sampleDir, "2020-01-01 00:00:00",
-      "2020-01-01T00:00:00Z").collect()
+    ImportJob.run[Formats.IssueHandle](spark,
+      Formats.detect("bcul", sampleDir), _.issueId,
+      _.parse("2020-01-01 00:00:00", "2020-01-01T00:00:00Z")).collect()
 
   private def readBz2Lines(path: String): Seq[String] = {
     val in = new org.apache.commons.compress.compressors.bzip2

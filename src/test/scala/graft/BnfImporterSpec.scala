@@ -5,7 +5,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.jobs.BnfImportJob
+import graft.cli.Formats
+import graft.jobs.ImportJob
 import graft.parse.BnfImporter
 
 /** Golden-output tests for the BNF importer against the reference's
@@ -26,8 +27,9 @@ class BnfImporterSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
 
   private lazy val results =
-    BnfImportJob.run(spark, sampleDir, "2020-01-01 00:00:00",
-      "2020-01-01T00:00:00Z").collect()
+    ImportJob.run[Formats.IssueHandle](spark,
+      Formats.detect("bnf", sampleDir), _.issueId,
+      _.parse("2020-01-01 00:00:00", "2020-01-01T00:00:00Z")).collect()
 
   private val issues = Seq(
     ("excelsior-1910-11-16-a", "excelsior-1910"),

@@ -33,8 +33,7 @@ class EndToEndSpec extends AnyFunSuite {
     // 2. distributed import through the generic job with quarantine
     val results = ImportJob.run[LuxImporter.IssueRef](spark, refs,
       _.issueId,
-      r => { val p = LuxImporter.parseIssue(r, "C", "T")
-        (p.issueId, p.issueJson, p.pageJsons) })
+      LuxImporter.parseIssue(_, "C", "T"))
     assert(ImportJob.quarantine(results).count() == 0)
 
     // 3. partitioned canonical write, read back with declared schemas

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.parse.{FedgazImporter, TetmlImporter}
+import graft.parse.{FedgazImporter, ParsedIssue, TetmlImporter}
 
 /** FedGaz importer specs. No metadata.tsv ships with the reference's
   * sample data (its own test cannot run either), so the fixture copies
@@ -23,7 +23,7 @@ class FedgazImporterSpec extends AnyFunSuite {
 
   /** First `n` token texts of the para-th paragraph on the given page of
     * the plain-TETML parse (used to build realistic titles). */
-  private def tokensOf(parsed: TetmlImporter.ParsedIssue, pageId: String,
+  private def tokensOf(parsed: ParsedIssue, pageId: String,
       para: Int, n: Int): String = {
     val page = mapper.readTree(parsed.pageJsons.toMap.apply(pageId))
     val paras = page.get("r").get(0).get("p")

@@ -8,7 +8,7 @@ import graft.parse.{BnfEnImporter, KbImporter}
 
 /** Generic import job: any (detect, parse) pair runs distributed with
   * quarantine + partitioned bz2 output. Driven here with the KB and
-  * BNF-EN importers (the formats without dedicated round-1 jobs). */
+  * BNF-EN importers and with synthesized results. */
 class ImportJobSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -17,8 +17,7 @@ class ImportJobSpec extends AnyFunSuite {
       "/root/reference/text_preparation/data/sample_data/KB")
     val results = ImportJob.run[KbImporter.IssueRef](spark, refs,
       _.issueId,
-      r => { val p = KbImporter.parseIssue(r, "C", "T")
-        (p.issueId, p.issueJson, p.pageJsons) })
+      KbImporter.parseIssue(_, "C", "T"))
     assert(results.count() == 3)
     assert(ImportJob.quarantine(results).count() == 0)
     val out = java.nio.file.Files.createTempDirectory("kb-out").toString
@@ -38,8 +37,7 @@ class ImportJobSpec extends AnyFunSuite {
       KbImporter.IssueRef("kbX", "1900-01-01", "a", "/nonexistent/path")
     val results = ImportJob.run[KbImporter.IssueRef](spark, refs,
       _.issueId,
-      r => { val p = KbImporter.parseIssue(r, "C", "T")
-        (p.issueId, p.issueJson, p.pageJsons) })
+      KbImporter.parseIssue(_, "C", "T"))
     assert(results.count() == 4)
     val q = ImportJob.quarantine(results).collect()
     assert(q.length == 1 && q.head.getString(0) == "kbX-1900-01-01-a")
@@ -81,6 +79,10 @@ class ImportJobSpec extends AnyFunSuite {
     assert(issues.length == 1 && issues.head.contains("kbx-1900-01-01-a"))
     val pages = spark.read.text(s"$out/pages").collect().map(_.getString(0))
     assert(pages.length == 1 && pages.head.contains("-p0001"))
+    // both canonical sinks carry a completion marker
+    for (sink <- Seq("issues", "pages"))
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(out, sink, "_SUCCESS")), sink)
   }
 
   test("a failed sink write joins its sibling and releases the cache") {
@@ -105,6 +107,9 @@ class ImportJobSpec extends AnyFunSuite {
       pagesOut.mkString("\n"))
     assert(pagesOut.exists(_.endsWith(".txt.bz2")), pagesOut.mkString("\n"))
     assert(spark.read.text(out.resolve("pages").toString).count() == 8)
+    // the store is incomplete, so neither sink is marked complete
+    assert(!java.nio.file.Files.exists(out.resolve("issues/_SUCCESS")))
+    assert(!java.nio.file.Files.exists(out.resolve("pages/_SUCCESS")))
     // and the write's cache of the parsed results is released
     assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
   }
@@ -115,8 +120,7 @@ class ImportJobSpec extends AnyFunSuite {
       Map("lepji-1900-06-03-a" -> "bpt6k6169427"))
     val results = ImportJob.run[BnfEnImporter.IssueRef](spark, refs,
       _.issueId,
-      r => { val p = BnfEnImporter.parseIssue(r, "C", "T")
-        (p.issueId, p.issueJson, p.pageJsons) })
+      BnfEnImporter.parseIssue(_, "C", "T"))
     assert(results.count() == 1)
     assert(results.head().pages.size == 8)
   }

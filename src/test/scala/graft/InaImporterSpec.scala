@@ -28,7 +28,7 @@ class InaImporterSpec extends AnyFunSuite {
 
   test("records carry sections/utterances/speech segments with time codes") {
     for (p <- parsed) {
-      val rec = mapper.readTree(p.recordJsons.head._2)
+      val rec = mapper.readTree(p.pageJsons.head._2)
       assert(rec.get("st").asText == "radio_broadcast")
       assert(rec.get("sm").asText == "audio")
       val sections = rec.get("s")
@@ -104,7 +104,7 @@ class InaImporterSpec extends AnyFunSuite {
     val issues = spark.read.schema(RebuildJob.audioIssueSchema)
       .json(spark.createDataset(parsed.map(_.issueJson)))
     val records = spark.read.schema(RebuildJob.recordSchema)
-      .json(spark.createDataset(parsed.flatMap(_.recordJsons.map(_._2))))
+      .json(spark.createDataset(parsed.flatMap(_.pageJsons.map(_._2))))
     val rebuilt = RebuildJob.rebuildAudioSolr(spark, issues, records, "T")
       .collect()
     assert(rebuilt.length == 3)

@@ -3,7 +3,8 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.jobs.LuxImportJob
+import graft.cli.Formats
+import graft.jobs.ImportJob
 import graft.parse.LuxImporter
 
 /** Golden-output tests for the Lux importer: parse the reference's
@@ -21,8 +22,9 @@ class LuxImporterSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
 
   private lazy val results =
-    LuxImportJob.run(spark, sampleDir, "2020-01-01 00:00:00",
-      "2020-01-01T00:00:00Z").collect()
+    ImportJob.run[Formats.IssueHandle](spark,
+      Formats.detect("lux", sampleDir), _.issueId,
+      _.parse("2020-01-01 00:00:00", "2020-01-01T00:00:00Z")).collect()
 
   test("detect finds the four sample issues with correct ids") {
     val refs = LuxImporter.detectIssues(sampleDir)
@@ -156,11 +158,12 @@ class LuxImporterSpec extends AnyFunSuite {
   test("import output feeds the rebuild stage end-to-end") {
     import org.apache.spark.sql.functions.col
     val out = java.nio.file.Files.createTempDirectory("lux").toString
-    val ds = LuxImportJob.run(spark, sampleDir, "2020-01-01 00:00:00",
-      "2020-01-01T00:00:00Z")
-    LuxImportJob.write(ds, out)
-    val issues = graft.rebuild.RebuildJob.readIssues(spark, s"$out/issues/*/*/*")
-    val pages = graft.rebuild.RebuildJob.readPages(spark, s"$out/pages/*/*")
+    val ds = ImportJob.run[Formats.IssueHandle](spark,
+      Formats.detect("lux", sampleDir), _.issueId,
+      _.parse("2020-01-01 00:00:00", "2020-01-01T00:00:00Z"))
+    ImportJob.write(ds, out)
+    val issues = graft.rebuild.RebuildJob.readIssues(spark, s"$out/issues")
+    val pages = graft.rebuild.RebuildJob.readPages(spark, s"$out/pages")
     val rebuilt = graft.rebuild.RebuildJob.rebuildSolr(spark, issues, pages, "T")
     val n = rebuilt.count()
     assert(n > 0)

@@ -89,8 +89,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     // there too (hadoopConf falls back to the executor SparkConf path)
     val results = ImportJob.run[LuxImporter.IssueRef](spark, refs,
       _.issueId,
-      r => { val p = LuxImporter.parseIssue(r, "C", "T")
-        (p.issueId, p.issueJson, p.pageJsons) })
+      LuxImporter.parseIssue(_, "C", "T"))
     assert(ImportJob.quarantine(results).count() == 0)
 
     // partitioned JSONL.bz2 sinks straight onto the object store

@@ -5,7 +5,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.jobs.OliveImportJob
+import graft.cli.Formats
+import graft.jobs.ImportJob
 import graft.parse.OliveImporter
 
 /** Golden-output tests for the Olive importer against the reference's
@@ -24,8 +25,9 @@ class OliveImporterSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
 
   private lazy val results =
-    OliveImportJob.run(spark, sampleDir, "2020-01-01 00:00:00",
-      "2020-01-01T00:00:00Z").collect()
+    ImportJob.run[Formats.IssueHandle](spark,
+      Formats.detect("olive", sampleDir), _.issueId,
+      _.parse("2020-01-01 00:00:00", "2020-01-01T00:00:00Z")).collect()
 
   test("detect finds issues; those without a Document archive quarantine") {
     val refs = OliveImporter.detectIssues(sampleDir)

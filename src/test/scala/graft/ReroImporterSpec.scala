@@ -4,7 +4,8 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.jobs.ReroImportJob
+import graft.cli.Formats
+import graft.jobs.ImportJob
 import graft.parse.ReroImporter
 
 /** Golden-output tests for the RERO importer against the reference's
@@ -23,8 +24,9 @@ class ReroImporterSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
 
   private lazy val results =
-    ReroImportJob.run(spark, sampleDir, "2020-01-01 00:00:00",
-      "2020-01-01T00:00:00Z").collect()
+    ImportJob.run[Formats.IssueHandle](spark,
+      Formats.detect("rero", sampleDir), _.issueId,
+      _.parse("2020-01-01 00:00:00", "2020-01-01T00:00:00Z")).collect()
 
   private val issues = Seq(
     ("BLB-1845-12-28-a", "BLB-1845"), ("EZR-1840-02-21-a", "EZR-1840"),

@@ -3,7 +3,8 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.jobs.SwaImportJob
+import graft.cli.Formats
+import graft.jobs.ImportJob
 import graft.parse.SwaImporter
 
 /** Golden-output tests for the SWA importer (CSV detect, zip archives,
@@ -19,8 +20,9 @@ class SwaImporterSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
 
   private lazy val results =
-    SwaImportJob.run(spark, sampleDir, "2020-01-01 00:00:00",
-      "2020-01-01T00:00:00Z").collect()
+    ImportJob.run[Formats.IssueHandle](spark,
+      Formats.detect("swa", sampleDir), _.issueId,
+      _.parse("2020-01-01 00:00:00", "2020-01-01T00:00:00Z")).collect()
 
   test("detect finds issues from the impresso-ids CSV") {
     val refs = SwaImporter.detectIssues(sampleDir)
