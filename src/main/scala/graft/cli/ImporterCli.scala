@@ -60,6 +60,10 @@ object ImporterCli {
 
   def run(spark: SparkSession, args: Args): Summary = {
     import spark.implicits._
+    // every importer's detect lists nothing under a missing directory:
+    // without this check the run would succeed with empty sinks
+    require(graft.util.FsWalk.isDir(args.inputDir),
+      s"--input-dir is not a directory: ${args.inputDir}")
     val handles = Formats.detect(args.format, args.inputDir, args.opts)
 
     // config selection reuses Discover.select's Column predicates over

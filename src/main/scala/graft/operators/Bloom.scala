@@ -61,10 +61,10 @@ object Bloom {
     val mat = graft.util.Iter.materialize(
       df.observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n")))
-    val n = obs.get("n").asInstanceOf[Long]
-    val bloom = keyBloom(mat, keyCol, fpp, knownCount = n)
-    graft.util.Iter.release(mat)
-    (bloom, n)
+    try {
+      val n = obs.get("n").asInstanceOf[Long]
+      (keyBloom(mat, keyCol, fpp, knownCount = n), n)
+    } finally graft.util.Iter.release(mat)
   }
 
   /** `might_contain` probe of `key` against a pre-built filter literal. */

@@ -449,8 +449,8 @@ object RebuildJob {
 
   /** Write rebuilt CIs as bz2 JSONL partitioned by (alias, year) — the
     * reference's per-`{alias}-{year}` directory layout re-expressed as a
-    * partitioned write (S9; shuffle-before-write replaces its FileLock +
-    * append, core.py:429-437's own TODO). */
+    * partitioned write (S9; a hash shuffle on (alias, year) before the
+    * write replaces its FileLock + append, core.py:429-437's own TODO). */
   def writeSolr(ds: Dataset[RebuiltCI], outPath: String): Unit =
     writeJsonl(ds.toDF(), outPath)
 
@@ -458,12 +458,13 @@ object RebuildJob {
     * passim, audio) as bz2 JSONL partitioned by (alias, year) — the
     * shared sink behind [[writeSolr]] and [[graft.cli.RebuilderCli]].
     * Overwrites are dynamic: only the partitions actually written are
-    * replaced (see [[graft.jobs.ImportJob.write]]). */
+    * replaced (see [[graft.jobs.ImportJob.write]]). The rows are
+    * hash-partitioned by (alias, year) into an explicit count first
+    * ([[graft.jobs.ImportJob.byAliasYear]]), so each pair gets exactly
+    * one file and the write runs on every shuffle partition. */
   def writeJsonl(df: DataFrame, outPath: String,
       writeMode: String = "overwrite"): Unit =
-    df.withColumn("alias", regexp_extract(col("id"), "^([^-]+)-", 1))
-      .withColumn("year", regexp_extract(col("id"), "-(\\d{4})-", 1).cast("int"))
-      .repartition(col("alias"), col("year"))
+    graft.jobs.ImportJob.byAliasYear(df, col("id"))
       .write.mode(writeMode)
       .partitionBy("alias", "year")
       .option("partitionOverwriteMode", "dynamic")

@@ -56,4 +56,12 @@ class BloomSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           df.queryExecution.executedPlan)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
+
+  test("keyBloomMaterialized releases its checkpoint when the build throws") {
+    val empty = spark.range(10).filter(col("id") < 0).toDF("k")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    // the key side is materialized, then keyBloom's n > 0 check throws
+    intercept[IllegalArgumentException](Bloom.keyBloomMaterialized(empty, "k"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+  }
 }

@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.cli.Formats
 import graft.jobs.ImportJob
 import graft.parse.{BnfEnImporter, KbImporter}
+import graft.queries.RebuildQueries
 
 /** Generic import job: any (detect, parse) pair runs distributed with
   * quarantine + partitioned bz2 output. Driven here with the KB and
@@ -112,6 +114,62 @@ class ImportJobSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(out.resolve("pages/_SUCCESS")))
     // and the write's cache of the parsed results is released
     assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+  }
+
+  test("KB import writes one file per (alias, year) per sink on every core") {
+    // locals, not fields: the parse closure ships to tasks
+    val cdt = "2020-01-01 00:00:00"
+    val base = java.nio.file.Files.createTempDirectory("kb-groups")
+    // issue year = 1900 + docId / 3360: three issues in each of four years
+    for (y <- 0 until 4; k <- 0 until 3) {
+      val docId = y * 3360L + k * 10
+      RebuildQueries.writeKbIssue(base, docId,
+        (0 until 8 + k).map(j => s"w${docId}_$j").mkString(" "))
+    }
+    val results = ImportJob.run[Formats.IssueHandle](spark,
+      Formats.detect("kb", base.toString), _.issueId, _.parse(cdt, cdt))
+    val out = java.nio.file.Files.createTempDirectory("kb-groups-out")
+
+    val stages = org.apache.spark.TestBus.stages(spark.sparkContext)(
+      ImportJob.write(results, out.toString))
+    // one shuffle per (alias, year)-partitioned sink, none before the parse
+    assert(stages.count(_._2 > 0) == 2, stages)
+    // the parse with the failed/ write, the two shuffles and the
+    // issues/ and pages/ writes: none in one task
+    assert(stages.size >= 5 && stages.forall(_._1 > 1), stages)
+
+    def ls(p: java.nio.file.Path): Seq[java.nio.file.Path] =
+      java.nio.file.Files.list(p).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+    for (sink <- Seq("issues", "pages")) {
+      val dirs = ls(out.resolve(sink))
+        .filter(_.getFileName.toString.startsWith("alias=")).flatMap(ls)
+      assert(dirs.map(_.getFileName.toString).sorted ==
+        (1900 to 1903).map(y => s"year=$y"), sink)
+      for (d <- dirs) {
+        val parts = ls(d).filter(_.toString.endsWith(".bz2"))
+        assert(parts.size == 1, s"$d: $parts")
+      }
+    }
+    val want = KbImporter.detectIssues(base.toString)
+      .map(KbImporter.parseIssue(_, cdt, cdt))
+    def read(sink: String): Set[String] =
+      spark.read.text(out.resolve(sink).toString).collect()
+        .map(_.getString(0)).toSet
+    assert(read("issues") == want.map(_.issueJson).toSet)
+    assert(read("pages") == want.flatMap(_.pageJsons.map(_._2)).toSet)
+  }
+
+  test("issues of one (alias, year) still parse on every core") {
+    val cdt = "2020-01-01 00:00:00"
+    val base = java.nio.file.Files.createTempDirectory("kb-one-year")
+    for (k <- 0 until 6)
+      RebuildQueries.writeKbIssue(base, k * 10L, s"w$k lorem ipsum")
+    val results = ImportJob.run[Formats.IssueHandle](spark,
+      Formats.detect("kb", base.toString), _.issueId, _.parse(cdt, cdt))
+    val sizes = results.rdd.glom().map(_.length).collect()
+    assert(sizes.length == math.min(6, spark.sparkContext.defaultParallelism))
+    assert(sizes.forall(_ > 0) && sizes.sum == 6, sizes.toSeq)
   }
 
   test("BNF-EN runs through the same generic job") {

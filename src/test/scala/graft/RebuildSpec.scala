@@ -199,4 +199,25 @@ class RebuildSpec extends AnyFunSuite {
     val row = back.filter(col("ft").isNotNull).head()
     assert(row.schema.fieldNames.contains("ppreb"))
   }
+
+  test("writeJsonl writes one file per (alias, year) from every shuffle partition") {
+    import spark.implicits._
+    val ids = for (a <- Seq("aa", "bb"); y <- 1900 to 1902; d <- 1 to 3)
+      yield f"$a-$y-01-$d%02d-a-i0001"
+    val out = java.nio.file.Files.createTempDirectory("jsonl-out")
+    val stages = org.apache.spark.TestBus.stages(spark.sparkContext)(
+      RebuildJob.writeJsonl(ids.map(i => (i, s"text of $i")).toDF("id", "ft"),
+        out.toString))
+    // the write stage completes last; AQE must not merge it into one task
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(stages.last._1 >= n, stages)
+    val dirs = for (a <- Seq("aa", "bb"); y <- 1900 to 1902)
+      yield out.resolve(s"alias=$a/year=$y")
+    for (d <- dirs) {
+      val parts = java.nio.file.Files.list(d).toArray.toSeq
+        .map(_.toString).filter(_.endsWith(".bz2"))
+      assert(parts.size == 1, s"$d: $parts")
+    }
+    assert(spark.read.json(out.toString).count() == ids.size)
+  }
 }
