@@ -386,6 +386,7 @@ object CurateCli {
   }
 
   def run(spark: SparkSession, args: Args): Summary = {
+    graft.util.LocalFs.install(spark)
     import graft.util.Iter.materialize
     val docs = graft.util.Tables.documents(spark, args.inputDir)
     val input = docs.count()

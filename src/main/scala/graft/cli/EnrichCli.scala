@@ -48,6 +48,7 @@ object EnrichCli {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    graft.util.LocalFs.install(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     req("job") match {

@@ -59,6 +59,7 @@ object ImporterCli {
       imported: Long, quarantined: Long)
 
   def run(spark: SparkSession, args: Args): Summary = {
+    graft.util.LocalFs.install(spark)
     import spark.implicits._
     // every importer's detect lists nothing under a missing directory:
     // without this check the run would succeed with empty sinks
@@ -95,7 +96,7 @@ object ImporterCli {
         val done = spark.read.text(s"${args.outputDir}/issues")
           .select(get_json_object(col("value"), "$.id").as("id"))
           .select(
-            regexp_extract(col("id"), "^([^-]+)-", 1).as("alias"),
+            ImportJob.aliasOf(col("id")).as("alias"),
             to_date(regexp_extract(col("id"), "-(\\d{4}-\\d{2}-\\d{2})-", 1))
               .as("date"),
             regexp_extract(col("id"), "-([^-]+)$", 1).as("edition"))
@@ -114,16 +115,20 @@ object ImporterCli {
     val results = ImportJob.run[Formats.IssueHandle](spark, todo,
       _.issueId, h => h.parse(cdt, ts))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ImportJob.write(results, args.outputDir,
+    // `run` yields one result per ref; the quarantined count rides the
+    // write's first job (the `failed/` write, which fills its cache of
+    // the validated documents) as an observed metric
+    val quarantined = new org.apache.spark.sql.Observation()
+    ImportJob.write(
+      results.observe(quarantined, count(col("error")).as("n")),
+      args.outputDir,
       writeMode = if (args.incremental && anySkipped) "append" else "overwrite")
-    // both counts in one aggregate over the persisted results
-    val counts = results.agg(count(lit(1)), count(col("error"))).head()
-    val (nResults, nQuarantined) = (counts.getLong(0), counts.getLong(1))
+    val nQuarantined = quarantined.get("n").asInstanceOf[Long]
     if (nQuarantined > 0)
       ImportJob.quarantine(results)
         .write.mode("append").json(s"${args.outputDir}/quarantine")
     val summary = Summary(handles.size, selected.size, selected.size - todo.size,
-      nResults - nQuarantined, nQuarantined)
+      todo.size - nQuarantined, nQuarantined)
     results.unpersist()
     summary
   }

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.jobs.ImportJob
 import graft.rebuild.RebuildJob
 import graft.operators.Stats
 
@@ -104,9 +105,8 @@ object RebuilderCli {
       val withKeys =
         if (df.columns.contains("alias") && df.columns.contains("year")) df
         else df
-          .withColumn("alias", regexp_extract(col("id"), "^([^-]+)-", 1))
-          .withColumn("year",
-            regexp_extract(col("id"), "-(\\d{4})-", 1).cast("int"))
+          .withColumn("alias", ImportJob.aliasOf(col("id")))
+          .withColumn("year", ImportJob.yearOf(col("id")).cast("int"))
       withKeys.filter(batchPredicate(batches))
         .drop("alias", "year")
     }
@@ -114,6 +114,11 @@ object RebuilderCli {
   case class Summary(rebuilt: Long, quarantined: Long)
 
   def run(spark: SparkSession, args: Args): Summary = {
+    graft.util.LocalFs.install(spark)
+    // name the path up front, as ImporterCli does, rather than fail in
+    // whichever read first resolves it
+    require(graft.util.FsWalk.isDir(args.inputDir),
+      s"--input-dir is not a directory: ${args.inputDir}")
     val batches = args.filterConfig.map { f =>
       parseBatches(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(f)), "UTF-8"))
@@ -182,8 +187,8 @@ object RebuilderCli {
           if (args.format == "solr" && args.medium == "print")
             Stats.rebuiltStats(w)
           else w
-            .groupBy(regexp_extract(col("id"), "^([^-]+)-", 1).as("alias"),
-              regexp_extract(col("id"), "-(\\d{4})-", 1).cast("int").as("year"))
+            .groupBy(ImportJob.aliasOf(col("id")).as("alias"),
+              ImportJob.yearOf(col("id")).cast("int").as("year"))
             .agg(count(lit(1)).as("n_cis"))
         stats.coalesce(1).write.mode("overwrite").json(sd)
       }

@@ -29,6 +29,16 @@ object ImportJob {
       pages: Seq[(String, String)],
       error: Option[String])
 
+  /** The alias of a canonical id (`alias-YYYY-MM-DD-edition[-...]`).
+    * Aliases never contain '-', the id separator, but may contain '_'
+    * (e.g. SwissInfo's SOC_CJ): the alias runs up to the first '-'. */
+  private[graft] def aliasOf(id: Column): Column =
+    regexp_extract(id, "^([^-]+)-", 1)
+
+  /** The year of a canonical id, as a string ("" if it has none). */
+  private[graft] def yearOf(id: Column): Column =
+    regexp_extract(id, "-(\\d{4})-", 1)
+
   /** `df` with the (alias, year) of its canonical id column `id`,
     * hash-partitioned on them into the session's shuffle-partition
     * count: a partitioned write of the result gets exactly one file per
@@ -37,10 +47,7 @@ object ImportJob {
     * into ONE partition, which leaves a single task compressing every
     * bz2 file in turn; it never coalesces an explicit count. */
   private[graft] def byAliasYear(df: DataFrame, id: Column): DataFrame =
-    // aliases never contain '-' (the canonical id separator) but may
-    // contain '_' (e.g. SwissInfo's SOC_CJ) — match up to the first '-'
-    df.withColumn("alias", regexp_extract(id, "^([^-]+)-", 1))
-      .withColumn("year", regexp_extract(id, "-(\\d{4})-", 1))
+    df.withColumn("alias", aliasOf(id)).withColumn("year", yearOf(id))
       .repartition(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
         col("alias"), col("year"))
