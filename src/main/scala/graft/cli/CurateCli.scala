@@ -1,9 +1,11 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, Dedup}
+import graft.util.Iter
 
 /** CLI entry point for the training-data curation pipeline — the user
   * surface that ties the curation families (x/d/t oracle rows) into
@@ -74,10 +76,18 @@ import graft.operators.{Curation, Dedup}
   *             "why was this dropped" must be answerable from output;
   *   the returned [[CurateCli.Summary]] carries per-stage counts.
   *
-  * Scale shape: every stage is the documented plan of its oracle row
-  * (no new shuffles are introduced by the composition — each stage's
-  * survivors feed the next as a narrow id semi/anti-join), and the
-  * audit frame is a union of the stages' drop sides.
+  * Scale shape: every stage is the documented plan of its oracle row,
+  * run over one verdict frame — every input document with `stage` and
+  * `reason`, null while it survives. Each stage computes its drops over
+  * the live documents and marks them on the frame, the first failing
+  * stage winning: an id-keyed left join of its drop set, or for exact
+  * dedup a window keyed by content hash. `dropped` and `curated` are
+  * two filters of the final frame. The default pass checkpoints it twice:
+  * after exact dedup (winnowing and the cluster survivors both read
+  * it) and before the writes (both writes read it). An optional stage
+  * checkpoints only its own drop set. Every [[CurateCli.Summary]] count
+  * is an observed metric on an action the call runs anyway, and `run`
+  * releases every checkpoint it made, on success or a throw.
   */
 object CurateCli {
 
@@ -148,8 +158,19 @@ object CurateCli {
       langDropped: Long = 0L)
 
   /** The stage frames of one pipeline pass: survivors with their
-    * leak-safe split, and the per-document audit rows. */
-  case class Frames(curated: DataFrame, dropped: DataFrame)
+    * leak-safe split, and the per-document audit rows. Both read
+    * `checkpoints`; [[release]] frees them once neither is read again. */
+  case class Frames(curated: DataFrame, dropped: DataFrame,
+      checkpoints: Seq[DataFrame]) {
+    def release(): Unit = checkpoints.foreach(Iter.release)
+  }
+
+  /** The audit stages, in pipeline order: the `stage` of a dropped row. */
+  private val Stages = Seq("lang", "quality", "gopher", "ppl", "dsir",
+    "exact_dup", "near_dup", "semantic_dup", "strip_spans", "decontaminate")
+
+  /** The split labels [[Curation.leakSafeSplit]] assigns. */
+  private val Splits = Seq("train", "val", "test")
 
   /** Stages 1–5 as pure frames (no writes) — the composition the
     * c1_curate_pipeline oracle row chains in DuckDB end to end.
@@ -171,226 +192,225 @@ object CurateCli {
       gopher: Boolean = false, pplCut: Boolean = false,
       langAllow: Option[Set[String]] = None,
       langMinHits: Int = 1): Frames = {
-    // Each stage is materialized before fan-out: the summary counts,
-    // the audit union and the curated write all re-reference these
-    // frames, and an un-materialized near-dup stage (the dominant
-    // cost) would re-run winnowing + clustering per reference.
-    import graft.util.Iter.materialize
-
-    // 0. language allowlist (optional) — the FIRST cut: one narrow
-    // row-local filter (the t3 n-gram heuristic with e13's stopword
-    // confidence floor), the cheapest signal in the pipeline, and
-    // every downstream stage is language-bound. EXACTLY the streaming
-    // e13 gate's expression tree (IngestGate.langGate), so the batch
-    // stage and the ingest gate agree by construction; the audit
-    // reason carries the heuristic's verdict so "why was this
-    // dropped" names the detected language.
-    val (kept0, droppedLang) = langAllow match {
-      case Some(langs) =>
-        val kl = materialize(
-          graft.streaming.IngestGate.langGate(docs, langs, "text",
-            langMinHits).select(col("doc_id")))
-        (docs.join(kl, Seq("doc_id"), "left_semi"),
-          docs.join(kl, Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), lit("lang").as("stage"),
-              concat(lit("lang_"), graft.functions.TextAnalysis
-                .langId(coalesce(col("text"), lit(""))))
-                .as("reason")))
-      case None =>
-        (docs, spark.emptyDataFrame
-          .withColumn("doc_id", lit(0L)).limit(0)
-          .select(col("doc_id"), lit("").as("stage"), lit("").as("reason")))
+    // One verdict frame: every input document with `stage` and `reason`
+    // null while it survives. Each stage computes its drops over the
+    // live documents and marks them, so the first failing stage wins
+    // and no document is ever in two places.
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def mat(df: DataFrame): DataFrame = {
+      val m = Iter.materialize(df)
+      held += m
+      m
+    }
+    def live(v: DataFrame): DataFrame = v.filter(col("stage").isNull)
+    // a live document for which `drop` holds takes `stage` and `reason`
+    def mark(v: DataFrame, stage: String, drop: Column,
+        reason: Column): DataFrame = {
+      val hit = col("stage").isNull && drop
+      v.withColumn("reason", when(hit, reason).otherwise(col("reason")))
+        .withColumn("stage", when(hit, lit(stage)).otherwise(col("stage")))
+    }
+    // a live document named in `drops` (doc_id, reason) takes `stage`
+    def fold(v: DataFrame, stage: String, drops: DataFrame): DataFrame =
+      mark(v.join(drops.select(col("doc_id"), lit(true).as("d_hit"),
+          col("reason").as("d_reason")), Seq("doc_id"), "left"),
+        stage, col("d_hit"), col("d_reason"))
+        .drop("d_hit", "d_reason")
+    // an optional stage materializes its drop set: the frame it folds
+    // into stays one plan, and what `op` checkpointed for itself is
+    // dead once the drops are
+    def optional(v: DataFrame, stage: String)(
+        op: DataFrame => DataFrame): DataFrame = {
+      val in = live(v)
+      val out = op(in)
+      val drops = mat(out)
+      Iter.releaseOwn(out, in)
+      fold(v, stage, drops)
     }
 
-    // 1. quality filter — keep the reason for the audit frame
-    val qf = Curation.qualityFilter(kept0, "doc_id", "text",
-        minWords = minWords)
-      .select(col("doc_id"), col("reason"), col("keep"))
-    val q1 = materialize(kept0.join(qf, "doc_id"))
-    val droppedQuality = q1.filter(!col("keep"))
-      .select(col("doc_id"), lit("quality").as("stage"), col("reason"))
-    val kept1q = q1.filter(col("keep")).drop("keep", "reason")
+    try {
+      var v = docs.select(docs.columns.map(col) ++ Seq(
+        lit(null).cast("string").as("stage"),
+        lit(null).cast("string").as("reason")): _*)
 
-    // 1.2 the Gopher rule battery (optional): the published
-    // web-scale heuristic set, entirely row-local, with the first
-    // failing rule as the per-document audit reason
-    val (kept1gp, droppedGopher) =
-      if (!gopher)
-        (kept1q, spark.emptyDataFrame
-          .withColumn("doc_id", lit(0L)).limit(0)
-          .select(col("doc_id"), lit("").as("stage"), lit("").as("reason")))
-      else {
-        val gr = materialize(
-          Curation.gopherRules(kept1q, "doc_id", "text")
-            .select(col("doc_id"), col("reason"), col("keep")))
-        (kept1q.join(gr.filter(col("keep")).select(col("doc_id")),
-          Seq("doc_id"), "left_semi"),
-          gr.filter(!col("keep"))
-            .select(col("doc_id"), lit("gopher").as("stage"),
-              col("reason")))
+      // 0. language allowlist (optional) — the FIRST cut: one narrow
+      // row-local filter (the t3 n-gram heuristic with e13's stopword
+      // confidence floor), the cheapest signal in the pipeline, and
+      // every downstream stage is language-bound. EXACTLY the
+      // streaming e13 gate's expression tree (IngestGate.langGate), so
+      // the batch stage and the ingest gate agree by construction; the
+      // audit reason carries the heuristic's verdict so "why was this
+      // dropped" names the detected language.
+      langAllow.foreach { langs =>
+        v = optional(v, "lang") { in =>
+          in.join(graft.streaming.IngestGate.langGate(in, langs, "text",
+              langMinHits).select(col("doc_id")), Seq("doc_id"), "left_anti")
+            .select(col("doc_id"), concat(lit("lang_"),
+              graft.functions.TextAnalysis.langId(
+                coalesce(col("text"), lit("")))).as("reason"))
+        }
       }
 
-    // 1.3 CCNet perplexity tail cut (optional): score the survivors
-    // with the corpus-trained KN model, keep each language's head and
-    // middle tertiles (Wenzek et al. 2020's `head+middle` recipe)
-    val (kept1pp, droppedPpl) =
-      if (!pplCut)
-        (kept1gp, spark.emptyDataFrame
-          .withColumn("doc_id", lit(0L)).limit(0)
-          .select(col("doc_id"), lit("").as("stage"), lit("").as("reason")))
-      else {
-        val tails = materialize(
-          Curation.perplexityBuckets(kept1gp, "doc_id", "text", "lang")
-            .filter(col("bucket") === "tail").select(col("doc_id")))
-        (kept1gp.join(tails, Seq("doc_id"), "left_anti"),
-          tails.select(col("doc_id"), lit("ppl").as("stage"),
-            lit("tail_bucket").as("reason")))
+      // 1. quality filter — the first failing x11 rule is the reason
+      v = fold(v, "quality", Curation.qualityFilter(live(v), "doc_id",
+          "text", minWords = minWords)
+        .filter(!col("keep")).select(col("doc_id"), col("reason")))
+
+      // 1.2 the Gopher rule battery (optional): the published
+      // web-scale heuristic set, entirely row-local, with the first
+      // failing rule as the per-document audit reason
+      if (gopher) v = optional(v, "gopher") { in =>
+        Curation.gopherRules(in, "doc_id", "text")
+          .filter(!col("keep")).select(col("doc_id"), col("reason"))
       }
 
-    // 1.5 DSIR importance resampling against the target corpus
-    // (optional): ds2's deterministic exp(logw−max) gate — the
-    // distribution-shaping stage between rules and dedup
-    val (kept1, droppedDsir) = dsirTarget match {
-      case Some(tgt) =>
-        val out = materialize(Curation.dsirResample(kept1pp, tgt,
-            "doc_id", "text")
-          .filter(!col("keep")).select(col("doc_id")))
-        (kept1pp.join(out, Seq("doc_id"), "left_anti"),
-          out.select(col("doc_id"), lit("dsir").as("stage"),
-            lit("importance_resample").as("reason")))
-      case None =>
-        (kept1pp, spark.emptyDataFrame
-          .withColumn("doc_id", lit(0L)).limit(0)
-          .select(col("doc_id"), lit("").as("stage"), lit("").as("reason")))
-    }
+      // 1.3 CCNet perplexity tail cut (optional): score the survivors
+      // with the corpus-trained KN model, keep each language's head
+      // and middle tertiles (Wenzek et al. 2020's `head+middle` recipe)
+      if (pplCut) v = optional(v, "ppl") { in =>
+        Curation.perplexityBuckets(in, "doc_id", "text", "lang")
+          .filter(col("bucket") === "tail")
+          .select(col("doc_id"), lit("tail_bucket").as("reason"))
+      }
 
-    // 2. exact dedup: lowest id per content hash survives
-    val canon = Dedup.exact(kept1, "doc_id", "text")
-      .select(col("canonical_id").as("doc_id"))
-    val droppedExact = kept1.join(canon, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), lit("exact_dup").as("stage"),
-        lit("duplicate_text").as("reason"))
-    val kept2 = materialize(kept1.join(canon, Seq("doc_id"), "left_semi"))
+      // 1.5 DSIR importance resampling against the target corpus
+      // (optional): ds2's deterministic exp(logw−max) gate — the
+      // distribution-shaping stage between rules and dedup
+      dsirTarget.foreach { tgt =>
+        v = optional(v, "dsir") { in =>
+          Curation.dsirResample(in, tgt, "doc_id", "text")
+            .filter(!col("keep"))
+            .select(col("doc_id"), lit("importance_resample").as("reason"))
+        }
+      }
 
-    // 3. near-dup span dedup: winnow pairs -> clusters -> longest wins
-    val clusters = materialize(Dedup.dupClusters(
-      Dedup.winnowedDupPairs(kept2, "doc_id", "text"), "id_a", "id_b"))
-    val survivors = Dedup.clusterSurvivors(clusters, kept2,
-        "doc_id", "text")
-      .select(col("keep_id"))
-    val nearDupIds = clusters
-      .join(survivors, clusters("member_id") === survivors("keep_id"),
-        "left_anti")
-      .select(col("member_id").as("doc_id"))
-    val droppedNear = nearDupIds
-      .select(col("doc_id"), lit("near_dup").as("stage"),
-        lit("duplicate_span").as("reason"))
-    val kept3 = materialize(
-      kept2.join(nearDupIds, Seq("doc_id"), "left_anti"))
+      // 2. exact dedup: the lowest live id per content hash survives —
+      // d1's rule as a window over the verdict frame, which it reads
+      // once, so the verdicts before it are computed once
+      v = mark(v.withColumn("canon",
+          min(when(col("stage").isNull, col("doc_id")))
+            .over(Window.partitionBy(md5(col("text"))))),
+        "exact_dup", col("doc_id") =!= col("canon"), lit("duplicate_text"))
+        .drop("canon")
+      // checkpoint 1 of 2: winnowing and the cluster survivors both
+      // read the exact-dedup survivors
+      val deduped = mat(v)
 
-    // 3.5 semantic dedup over the embeddings sidecar (optional):
-    // d15's cell-local pruning on the surviving docs' vectors
-    val (kept3s, droppedSem) = embeds match {
-      case Some(em) =>
-        val vecs = materialize(em
-          .select(col("vec_id").cast("long").as("vec_id"),
-            col("embedding"))
-          .join(kept3.select(col("doc_id").as("vec_id")),
-            Seq("vec_id"), "left_semi"))
-        val n = vecs.count()
-        val k = math.max(16L, n / 100).toInt
-        val centroids: Array[Array[Float]] = vecs
-          .orderBy(col("vec_id")).limit(k)
-          .collect().map(_.getSeq[Float](1).toArray)
-        val semDrops = materialize(
+      // 3. near-dup span dedup: winnow pairs -> clusters -> longest
+      // wins. The clusters come back over their own checkpoint, which
+      // the leak-safe split reads again.
+      val kept2 = live(deduped)
+      val clusters = Dedup.dupClusters(
+        Dedup.winnowedDupPairs(kept2, "doc_id", "text"), "id_a", "id_b")
+      held += clusters
+      val keepIds = Dedup.clusterSurvivors(clusters, kept2,
+          "doc_id", "text")
+        .select(col("keep_id"))
+      v = fold(deduped, "near_dup", clusters
+        .join(keepIds, clusters("member_id") === keepIds("keep_id"),
+          "left_anti")
+        .select(col("member_id").as("doc_id"),
+          lit("duplicate_span").as("reason")))
+
+      // 3.5 semantic dedup over the embeddings sidecar (optional):
+      // d15's cell-local pruning on the surviving docs' vectors
+      embeds.foreach { em =>
+        v = optional(v, "semantic_dup") { in =>
+          val vecs = mat(em
+            .select(col("vec_id").cast("long").as("vec_id"),
+              col("embedding"))
+            .join(in.select(col("doc_id").as("vec_id")),
+              Seq("vec_id"), "left_semi"))
+          val k = math.max(16L, vecs.count() / 100).toInt
+          val centroids: Array[Array[Float]] = vecs
+            .orderBy(col("vec_id")).limit(k)
+            .collect().map(_.getSeq[Float](1).toArray)
           Dedup.semDedup(vecs, "vec_id", "embedding", centroids,
-            semanticTau)
-          .filter(!col("keep"))
-          .select(col("vec_id").as("doc_id")))
-        (kept3.join(semDrops, Seq("doc_id"), "left_anti"),
-          semDrops.select(col("doc_id"),
-            lit("semantic_dup").as("stage"),
-            lit("semantic_duplicate").as("reason")))
-      case None =>
-        (kept3, spark.emptyDataFrame
-          .withColumn("doc_id", lit(0L)).limit(0)
-          .select(col("doc_id"), lit("").as("stage"), lit("").as("reason")))
-    }
-
-    // 3.8 corpus-wide duplicated-span stripping (optional): x18's
-    // rewrite over the deduped survivors — duplicated spans that
-    // outlived near-dup dedup as sub-document fragments are removed
-    // from the TEXT itself (RefinedWeb's span removal, applied after
-    // dedup so whole-document duplicates don't first shred each
-    // other); a doc stripped to nothing is dropped with an audit row,
-    // never shipped empty
-    val (kept3x, droppedStrip) =
-      if (stripKeepFirst) {
-        // x24's variant: exact keep-first spans — ONE canonical copy
-        // of every duplicated run survives somewhere in the corpus,
-        // the rest is excised from the text (Raffel's "all but one")
-        val st = materialize(Curation.exciseSpansText(kept3s, "doc_id",
-          "text", graft.operators.Dedup.exactDupSpansKeepFirst(
-            kept3s, "doc_id", "text")))
-        (kept3s.drop("text")
-          .join(st.filter(length(trim(col("clean"))) > 0)
-            .select(col("doc_id"), col("clean").as("text")), "doc_id"),
-          st.filter(length(trim(col("clean"))) === 0)
-            .select(col("doc_id"), lit("strip_spans").as("stage"),
-              lit("fully_duplicated").as("reason")))
-      } else if (!stripSpans)
-        (kept3s, spark.emptyDataFrame
-          .withColumn("doc_id", lit(0L)).limit(0)
-          .select(col("doc_id"), lit("").as("stage"), lit("").as("reason")))
-      else {
-        val st = materialize(
-          Curation.stripDupSpans(kept3s, "doc_id", "text")
-            .select(col("doc_id"), col("kept_tokens"), col("clean_text")))
-        (kept3s.drop("text")
-          .join(st.filter(col("kept_tokens") > 0L)
-            .select(col("doc_id"), col("clean_text").as("text")),
-            "doc_id"),
-          st.filter(col("kept_tokens") === 0L)
-            .select(col("doc_id"), lit("strip_spans").as("stage"),
-              lit("fully_duplicated").as("reason")))
+              semanticTau)
+            .filter(!col("keep"))
+            .select(col("vec_id").as("doc_id"),
+              lit("semantic_duplicate").as("reason"))
+        }
       }
 
-    // 4. decontamination against the eval corpus (optional)
-    val (kept4, droppedContam) = eval match {
-      case Some(ev) =>
-        val contaminated = materialize(Curation.contamination(kept3x,
-            ev, "doc_id", "text")
-          .filter(col("n_overlap") >= maxOverlap)
-          .select(col("doc_id")))
-        (kept3x.join(contaminated, Seq("doc_id"), "left_anti"),
-          contaminated.select(col("doc_id"),
-            lit("decontaminate").as("stage"),
-            lit("eval_overlap").as("reason")))
-      case None =>
-        (kept3x, spark.emptyDataFrame
-          .withColumn("doc_id", lit(0L)).limit(0)
-          .select(col("doc_id"), lit("").as("stage"), lit("").as("reason")))
-    }
+      // 3.8 corpus-wide duplicated-span stripping (optional): x18's
+      // rewrite over the deduped survivors — duplicated spans that
+      // outlived near-dup dedup as sub-document fragments are removed
+      // from the TEXT itself (RefinedWeb's span removal, applied after
+      // dedup so whole-document duplicates don't first shred each
+      // other); a doc stripped to nothing is dropped with an audit
+      // row, never shipped empty
+      val stripping = stripSpans || stripKeepFirst
+      if (stripping) {
+        val in = live(v)
+        val out =
+          if (stripKeepFirst)
+            // x24's variant: exact keep-first spans — ONE canonical
+            // copy of every duplicated run survives somewhere in the
+            // corpus, the rest is excised from the text (Raffel's "all
+            // but one")
+            Curation.exciseSpansText(in, "doc_id", "text",
+                Dedup.exactDupSpansKeepFirst(in, "doc_id", "text"))
+              .select(col("doc_id"), col("clean"),
+                (length(trim(col("clean"))) === 0).as("emptied"))
+          else
+            Curation.stripDupSpans(in, "doc_id", "text")
+              .select(col("doc_id"), col("clean_text").as("clean"),
+                (col("kept_tokens") === 0L).as("emptied"))
+        val st = mat(out)
+        Iter.releaseOwn(out, in)
+        val rewritten = v.join(st.select(col("doc_id"), col("clean")),
+            Seq("doc_id"), "left")
+          .select(v.columns.map {
+            case "text" => coalesce(col("clean"), col("text")).as("text")
+            case c => col(c)
+          }: _*)
+        v = fold(rewritten, "strip_spans", st.filter(col("emptied"))
+          .select(col("doc_id"), lit("fully_duplicated").as("reason")))
+      }
 
-    // 5. leakage-safe split over the SAME near-dup clusters
-    val split = Curation.leakSafeSplit(kept4, "doc_id", clusters)
-      .select(col("doc_id"), col("split"))
-    val k4 = materialize(kept4)
-    Frames(
-      curated = k4.join(split, "doc_id"),
-      dropped = droppedLang.union(droppedQuality).union(droppedGopher)
-        .union(droppedPpl)
-        .union(droppedDsir).union(droppedExact)
-        .union(droppedNear)
-        .union(droppedSem).union(droppedStrip).union(droppedContam))
+      // 4. decontamination against the eval corpus (optional). The
+      // overlap is a per-document count, so it runs over the first
+      // survivor set that carries the final text: the exact-dedup
+      // checkpoint, unless the strip stage rewrote the text since.
+      eval.foreach { ev =>
+        v = fold(v, "decontaminate", Curation.contamination(
+            live(if (stripping) v else deduped), ev, "doc_id", "text")
+          .filter(col("n_overlap") >= maxOverlap)
+          .select(col("doc_id"), lit("eval_overlap").as("reason")))
+      }
+      // checkpoint 2 of 2: the curated and dropped frames both read it
+      val verdicts = mat(v)
+      // every other checkpoint of the pass is dead now
+      held.filterNot(h => (h eq verdicts) || (h eq clusters))
+        .foreach(Iter.release)
+
+      // 5. leakage-safe split over the SAME near-dup clusters
+      val kept = live(verdicts).drop("stage", "reason")
+      val split = Curation.leakSafeSplit(kept, "doc_id", clusters)
+        .select(col("doc_id"), col("split"))
+      Frames(
+        curated = kept.join(split, "doc_id"),
+        dropped = verdicts.filter(col("stage").isNotNull)
+          .select(col("doc_id"), col("stage"), col("reason")),
+        checkpoints = Seq(verdicts, clusters))
+    } catch {
+      case e: Throwable =>
+        held.foreach(Iter.release)
+        throw e
+    }
   }
 
   def run(spark: SparkSession, args: Args): Summary = {
     graft.util.LocalFs.install(spark)
-    import graft.util.Iter.materialize
     val docs = graft.util.Tables.documents(spark, args.inputDir)
-    val input = docs.count()
-    val frames = pipeline(spark, docs,
+    // Every Summary count is an observed metric on an action the call
+    // runs anyway: `input` on the first action that reads the input,
+    // the per-stage drops on the dropped/ write, the curated and
+    // per-split counts on the curated/ write.
+    val read, droppedBy, curatedBy = new Observation()
+    val frames = pipeline(spark,
+      docs.observe(read, count(lit(1)).as("n")),
       args.evalDir.map(ed => graft.util.Tables.documents(spark, ed)),
       args.minWords, args.maxOverlap,
       embeds = if (args.semantic)
@@ -403,21 +423,43 @@ object CurateCli {
       stripKeepFirst = args.stripKeepFirst, gopher = args.gopher,
       pplCut = args.pplCut, langAllow = args.langAllow,
       langMinHits = args.langMinHits)
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // a frame is materialized only when a second action reads it
+    def readTwice(df: DataFrame, twice: Boolean): DataFrame =
+      if (!twice) df
+      else {
+        val m = Iter.materialize(df)
+        held += m
+        m
+      }
+    try {
+      // 6. shard-numbered, split-partitioned write (x2's seeded
+      // layout; shard/pos join back on id so payload columns ride
+      // along)
+      val shards = Curation.shuffleShards(frames.curated, "doc_id",
+        args.shards, seed = "curate")
+      val curated = readTwice(frames.curated.join(shards, "doc_id"),
+        args.tarShards || args.packBudget > 0 || args.chunkLen > 0)
+      val curatedCounts = count(lit(1)).as("n") +:
+        Splits.map(s => count_if(col("split") === s).as(s))
+      curated.observe(curatedBy, curatedCounts.head, curatedCounts.tail: _*)
+        .write.mode("overwrite").partitionBy("split")
+        .parquet(s"${args.outputDir}/curated")
+      val dropped = readTwice(frames.dropped, args.distill)
+      val stageCounts = Stages.map(s => count_if(col("stage") === s).as(s))
+      dropped.observe(droppedBy, stageCounts.head, stageCounts.tail: _*)
+        .write.mode("overwrite").parquet(s"${args.outputDir}/dropped")
+      def longs(o: Observation): Map[String, Long] =
+        o.get.map { case (k, n) => k -> n.asInstanceOf[Long] }
+      val drops = longs(droppedBy)
+      val kept = longs(curatedBy)
+      // the non-empty splits, as a group-by over curated/ would list
+      val splits = Splits.map(s => s -> kept(s)).filter(_._2 > 0)
 
-    // 6. shard-numbered, split-partitioned write (x2's seeded layout;
-    // shard/pos join back on id so payload columns ride along)
-    val shards = Curation.shuffleShards(frames.curated, "doc_id",
-      args.shards, seed = "curate")
-    val curated = materialize(frames.curated.join(shards, "doc_id"))
-    curated.write.mode("overwrite").partitionBy("split")
-      .parquet(s"${args.outputDir}/curated")
-    val dropped = materialize(frames.dropped)
-    dropped.write.mode("overwrite").parquet(s"${args.outputDir}/dropped")
-    // optional delivery format: one tar shard set per split (x13's
-    // manifested sink — the layout trainers stream)
-    if (args.tarShards)
-      curated.select(col("split")).distinct().collect()
-        .map(_.getString(0)).foreach { sp =>
+      // optional delivery format: one tar shard set per split (x13's
+      // manifested sink — the layout trainers stream)
+      if (args.tarShards)
+        splits.foreach { case (sp, _) =>
           graft.sources.TarShards.write(
             curated.filter(col("split") === sp)
               .select(col("doc_id").cast("string").as("name"),
@@ -426,96 +468,92 @@ object CurateCli {
             nShards = args.shards)
         }
 
-    // optional model distillation: train the lr1 classifier on the
-    // rule verdicts over the FULL input (keeps and drops both carry
-    // signal), write every document's score — the serving artifact
-    // the next ingest run's IngestGate.scoreGate ships as literals
-    val weights =
-      if (!args.distill) None
-      else {
-        import graft.operators.LogReg
-        val t = coalesce(col("text"), lit(""))
-        val (f1, f2, f3) = LogReg.qualityFeatures(t, length(t))
-        // the stage-1 verdicts are already materialized in the audit
-        // frame — an anti-join against its quality drops beats
-        // re-running the regex-heavy rule pass over the full corpus
-        val qualityDrops = dropped
-          .filter(col("stage") === "quality").select(col("doc_id"))
-        val feats = docs
-          .join(qualityDrops.withColumn("q_drop", lit(true)),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"), f1.as("f1"), f2.as("f2"), f3.as("f3"),
-            col("q_drop").isNull.cast("double").as("y"))
-          .filter(col("f1") > 0.0) // zero-token rows have NaN features
-        val fs = Seq("f1", "f2", "f3")
-        val w = LogReg.train(feats, "y", fs)
-        feats.select(col("doc_id"),
-            (LogReg.score(w, fs).cast("decimal(24,6)") *
-              lit(1000000L).cast("decimal(7,0)")).cast("bigint")
-              .as("score_e6"))
-          .write.mode("overwrite").parquet(s"${args.outputDir}/scores")
-        Some(w.toSeq)
-      }
+      // optional model distillation: train the lr1 classifier on the
+      // rule verdicts over the FULL input (keeps and drops both carry
+      // signal), write every document's score — the serving artifact
+      // the next ingest run's IngestGate.scoreGate ships as literals
+      val weights =
+        if (!args.distill) None
+        else {
+          import graft.operators.LogReg
+          val t = coalesce(col("text"), lit(""))
+          val (f1, f2, f3) = LogReg.qualityFeatures(t, length(t))
+          // the stage-1 verdicts are already materialized in the audit
+          // frame — an anti-join against its quality drops beats
+          // re-running the regex-heavy rule pass over the full corpus
+          val qualityDrops = dropped
+            .filter(col("stage") === "quality").select(col("doc_id"))
+          val feats = docs
+            .join(qualityDrops.withColumn("q_drop", lit(true)),
+              Seq("doc_id"), "left")
+            .select(col("doc_id"), f1.as("f1"), f2.as("f2"), f3.as("f3"),
+              col("q_drop").isNull.cast("double").as("y"))
+            .filter(col("f1") > 0.0) // zero-token rows have NaN features
+          val fs = Seq("f1", "f2", "f3")
+          val w = LogReg.train(feats, "y", fs)
+          feats.select(col("doc_id"),
+              (LogReg.score(w, fs).cast("decimal(24,6)") *
+                lit(1000000L).cast("decimal(7,0)")).cast("bigint")
+                .as("score_e6"))
+            .write.mode("overwrite").parquet(s"${args.outputDir}/scores")
+          Some(w.toSeq)
+        }
 
-    // optional packed-payload delivery (l6): per split, the curated
-    // survivors next-fit-packed into strict token-budget rows — the
-    // trainer-ready payload, one exchange per split, the whole
-    // tokenize → curate → pack → write chain closed in one CLI run
-    if (args.packBudget > 0) {
-      val packable = curated.select(col("doc_id"), col("split"),
-        col("shard"), col("text"),
-        graft.functions.TextAnalysis.tokenCount(col("text"))
-          .cast("long").as("n_tok"))
-      packable.select(col("split")).distinct().collect()
-        .map(_.getString(0)).foreach { sp =>
+      // optional packed-payload delivery (l6): per split, the curated
+      // survivors next-fit-packed into strict token-budget rows — the
+      // trainer-ready payload, one exchange per split, the whole
+      // tokenize → curate → pack → write chain closed in one CLI run
+      if (args.packBudget > 0) {
+        val packable = curated.select(col("doc_id"), col("split"),
+          col("shard"), col("text"),
+          graft.functions.TextAnalysis.tokenCount(col("text"))
+            .cast("long").as("n_tok"))
+        splits.foreach { case (sp, _) =>
           graft.operators.Layout.packPayloads(
             packable.filter(col("split") === sp),
             "doc_id", "n_tok", "text", "shard", args.packBudget)
           .write.mode("overwrite")
           .parquet(s"${args.outputDir}/packed/$sp")
         }
-    }
+      }
 
-    // optional concat-and-chunk manifests (x15): per split, every
-    // document's token-range in the (shard, doc_id)-ordered virtual
-    // stream — the shuffled pack order a trainer consumes
-    if (args.chunkLen > 0) {
-      val counted = curated.select(col("doc_id"), col("split"),
-        col("shard"),
-        size(org.apache.spark.sql.functions.filter(
-          split(trim(col("text")), "\\s+"), w => w =!= ""))
-          .cast("bigint").as("n_tok"))
-      counted.select(col("split")).distinct().collect()
-        .map(_.getString(0)).foreach { sp =>
+      // optional concat-and-chunk manifests (x15): per split, every
+      // document's token-range in the (shard, doc_id)-ordered virtual
+      // stream — the shuffled pack order a trainer consumes
+      if (args.chunkLen > 0) {
+        val counted = curated.select(col("doc_id"), col("split"),
+          col("shard"),
+          size(org.apache.spark.sql.functions.filter(
+            split(trim(col("text")), "\\s+"), w => w =!= ""))
+            .cast("bigint").as("n_tok"))
+        splits.foreach { case (sp, _) =>
           Curation.concatChunkOffsets(
             counted.filter(col("split") === sp), "doc_id", "n_tok",
             col("shard"), args.chunkLen)
           .write.mode("overwrite")
           .parquet(s"${args.outputDir}/chunks/$sp")
         }
-    }
+      }
 
-    // summary from the in-plan frame: a fully-dropped corpus leaves an
-    // empty (schema-less) parquet dir that a validating re-read would
-    // refuse to infer
-    def stageCount(stage: String): Long =
-      dropped.filter(col("stage") === stage).count()
-    Summary(
-      input = input,
-      lowQuality = stageCount("quality"),
-      exactDups = stageCount("exact_dup"),
-      nearDups = stageCount("near_dup"),
-      semanticDups = stageCount("semantic_dup"),
-      contaminated = stageCount("decontaminate"),
-      curated = curated.count(),
-      distillWeights = weights,
-      dsirDropped = stageCount("dsir"),
-      strippedEmpty = stageCount("strip_spans"),
-      gopherDropped = stageCount("gopher"),
-      pplTailDropped = stageCount("ppl"),
-      langDropped = stageCount("lang"),
-      splits = curated.groupBy("split").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+      Summary(
+        input = longs(read)("n"),
+        lowQuality = drops("quality"),
+        exactDups = drops("exact_dup"),
+        nearDups = drops("near_dup"),
+        semanticDups = drops("semantic_dup"),
+        contaminated = drops("decontaminate"),
+        curated = kept("n"),
+        distillWeights = weights,
+        dsirDropped = drops("dsir"),
+        strippedEmpty = drops("strip_spans"),
+        gopherDropped = drops("gopher"),
+        pplTailDropped = drops("ppl"),
+        langDropped = drops("lang"),
+        splits = splits.toMap)
+    } finally {
+      held.foreach(Iter.release)
+      frames.release()
+    }
   }
 
   def main(argv: Array[String]): Unit = {

@@ -905,13 +905,18 @@ object Curation {
     // Materialized: the scored frame feeds BOTH the quantile branch
     // and the labeling join — left live, the entire KN model build
     // would run twice (measured: 22.5 s vs t13's 15.5 s at sf10 was
-    // mostly this). `lang` rides knBigramScore's own reattach join
-    // (guide §1.2): the former separate id-keyed join of the scored
-    // frame against a THIRD corpus scan is gone from the plan.
-    val scored = graft.util.Iter.materialize(
-      knBigramScore(df, idCol, textCol,
-        carry = Seq("lang" -> coalesce(col(langCol), lit(""))),
-        materializeBigrams = true))
+    // mostly this). So is the per-document bigram frame it is scored
+    // from, which feeds both the model and the scoring join; it is
+    // dead, and released, once the scores are checkpointed. `lang`
+    // rides knScore's own reattach join (guide §1.2): the former
+    // separate id-keyed join of the scored frame against a THIRD
+    // corpus scan is gone from the plan.
+    import graft.util.Iter.{materialize, release}
+    val db = materialize(knDocBigrams(df, idCol, textCol))
+    val scored =
+      try materialize(knScore(df, db, idCol, KnDiscount,
+        carry = Seq("lang" -> coalesce(col(langCol), lit("")))))
+      finally release(db)
     val cuts = scored.groupBy(col("lang"))
       .agg(
         percentile(col("xent_e6"), lit(1.0 / 3)).as("p33"),
@@ -1434,26 +1439,26 @@ object Curation {
   }
 
   def knBigramScore(df: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75,
-      carry: Seq[(String, Column)] = Nil,
-      materializeBigrams: Boolean = false): DataFrame = {
-    require(discount > 0 && discount < 1, "discount must be in (0,1)")
+      discount: Double = KnDiscount,
+      carry: Seq[(String, Column)] = Nil): DataFrame =
     // the per-document bigram frame feeds BOTH the model aggregation
-    // and the scoring join — left live, the tokenize + bigram-explode
+    // and the scoring join; left live, the tokenize + bigram-explode
     // + partial-agg pass over the corpus runs TWICE per invocation
     // (plan-verified: 3 parquet scans of the corpus in one t13
-    // action, two through the explode). `materializeBigrams`
-    // checkpoints it once — (id, w1, w2, n), the bytes the scoring
-    // join shuffles anyway (guide §1.2). Measured trade at sf0.1: the
+    // action, two through the explode). Measured trade at sf0.1: a
     // checkpoint job chain costs ~0.5 s flat, so the bare t13 row
-    // (one cheap pass) keeps the default false while t14 — whose KN
-    // build is the dominant slice of a multi-stage row — passes true;
-    // at 100 TB-class inputs the second corpus pass always loses to
-    // the checkpoint, so production callers should pass true.
-    val db =
-      if (materializeBigrams)
-        graft.util.Iter.materialize(knDocBigrams(df, idCol, textCol))
-      else knDocBigrams(df, idCol, textCol)
+    // (one cheap pass) keeps it live, while [[perplexityBuckets]] —
+    // whose KN build is the dominant slice of a multi-stage row —
+    // checkpoints it and scores through [[knScore]].
+    knScore(df, knDocBigrams(df, idCol, textCol), idCol, discount, carry)
+
+  /** The KN discount D t13 and t14 score with. */
+  private val KnDiscount = 0.75
+
+  /** [[knBigramScore]] over `db`, the [[knDocBigrams]] frame of `df`. */
+  private def knScore(df: DataFrame, db: DataFrame, idCol: String,
+      discount: Double, carry: Seq[(String, Column)]): DataFrame = {
+    require(discount > 0 && discount < 1, "discount must be in (0,1)")
     val p = knModel(db, discount).select(col("w1"), col("w2"),
       col("lnp"))
     val scored = db.join(p, Seq("w1", "w2"))

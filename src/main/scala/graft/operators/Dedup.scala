@@ -422,7 +422,10 @@ object Dedup {
     * does not grow with iterations (the classic iterative-DataFrame
     * trap). Sessions with a checkpoint dir get reliable
     * `checkpoint()` (survives executor loss mid-loop); others get
-    * `localCheckpoint()` — [[graft.util.Iter.materialize]].
+    * `localCheckpoint()` — [[graft.util.Iter.materialize]]. Every
+    * checkpoint but the returned frame's own is released before the
+    * call returns or throws; the caller releases that one
+    * ([[graft.util.Iter.release]]) when done with the clusters.
     *
     * @param pairs near-dup pairs, one row per undirected edge
     * @return (member_id, cluster_id): one row per distinct node,
@@ -438,80 +441,89 @@ object Dedup {
     // here and then again in every propagation round. The pairs are
     // tiny relative to the corpus that produced them; the pipeline is
     // not.
+    import graft.util.Iter.{materialize, release}
     val sc = pairs.sparkSession.sparkContext
-    sc.setJobDescription("cc: edges")
-    val edges = graft.util.Iter.materialize(
-      pairs.select(col(aCol).as("a"), col(bCol).as("b")))
-    val sym = edges.select(col("a").as("id"), col("b").as("nbr"))
-      .union(edges.select(col("b").as("id"), col("a").as("nbr")))
-    sc.setJobDescription("cc: init labels")
-    var labels = graft.util.Iter.materialize(sym.groupBy("id")
-      .agg(least(min(col("nbr")), first(col("id"))).as("label")))
+    var edges, labels: DataFrame = null
     var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      sc.setJobDescription(s"cc: round $iter")
-      // neighbor labels: edge (id, nbr) carries label(nbr) to id;
-      // `changed` rides along so convergence costs one cheap filter
-      // over the already-checkpointed result, not another join
-      val nbrMin = sym
-        .join(labels.withColumnRenamed("id", "nbr")
-          .withColumnRenamed("label", "nbr_label"), "nbr")
-        .groupBy("id").agg(min(col("nbr_label")).as("nbr_label"))
-      // pointer-doubling shortcut: chase TWO hops up the label forest
-      // (labels are always node ids, so the lookup always resolves;
-      // left joins guard the component-min's self-label anyway). Two
-      // chases per round quarter the remaining chain depth instead of
-      // halving it — measured on g5's sparse co-occurrence graph at
-      // sf0.1 (520 components, long thin trees): 19 rounds → 10, and
-      // every round is ~8 Spark jobs, so round count is the wall.
-      // Each chase is a V-row broadcast-sized lookup, far cheaper than
-      // a round. Skipped in round 1: initial labels are one-hop
-      // minima, so no label chains exist yet to compress —
-      // near-clique graphs (the common case, 2 rounds total) never
-      // pay for the extra joins.
-      val joined = labels.join(nbrMin, "id")
-      val withHop = if (iter == 0) joined.withColumn("hop_label",
-          lit(null).cast(joined.schema("label").dataType))
-        else {
-          val hop1 = joined.join(labels.select(col("id").as("hop_id"),
-            col("label").as("hop1_label")), col("label") === col("hop_id"),
-            "left").drop("hop_id")
-          hop1.join(labels.select(col("id").as("hop_id"),
-              col("label").as("hop2_label")),
-              col("hop1_label") === col("hop_id"), "left")
-            .select(hop1.columns.map(col) :+
-              least(col("hop1_label"), col("hop2_label"))
-                .as("hop_label"): _*)
-            .drop("hop1_label")
-        }
-      // the convergence bit rides the checkpoint action as an observed
-      // metric (CollectMetrics), so each round is ONE job — the
-      // separate filter-isEmpty scan this replaces was a whole extra
-      // job per round (rounds × ~0.1 s of pure scheduling at sf0.1,
-      // and an extra pass over the vector at any scale)
-      val obs = new org.apache.spark.sql.Observation(s"cc_changed_$iter")
-      val next = graft.util.Iter.materialize(withHop
-        .select(col("id"),
-          least(col("label"), col("nbr_label"), col("hop_label"))
-            .as("label"),
-          (least(col("nbr_label"), col("hop_label")) < col("label"))
-            .as("changed"))
-        .observe(obs, coalesce(sum(col("changed").cast("long")), lit(0L))
-          .as("n_changed")))
-      converged = obs.get("n_changed").asInstanceOf[Long] == 0L
-      // round i-1's checkpointed vector is dead once round i is live
-      // (the pageRank release discipline)
-      graft.util.Iter.release(labels)
-      labels = next.drop("changed")
-      iter += 1
+    try {
+      sc.setJobDescription("cc: edges")
+      edges = materialize(
+        pairs.select(col(aCol).as("a"), col(bCol).as("b")))
+      val sym = edges.select(col("a").as("id"), col("b").as("nbr"))
+        .union(edges.select(col("b").as("id"), col("a").as("nbr")))
+      sc.setJobDescription("cc: init labels")
+      labels = materialize(sym.groupBy("id")
+        .agg(least(min(col("nbr")), first(col("id"))).as("label")))
+      var iter = 0
+      while (!converged && iter < maxIter) {
+        sc.setJobDescription(s"cc: round $iter")
+        // neighbor labels: edge (id, nbr) carries label(nbr) to id;
+        // `changed` rides along so convergence costs one cheap filter
+        // over the already-checkpointed result, not another join
+        val nbrMin = sym
+          .join(labels.withColumnRenamed("id", "nbr")
+            .withColumnRenamed("label", "nbr_label"), "nbr")
+          .groupBy("id").agg(min(col("nbr_label")).as("nbr_label"))
+        // pointer-doubling shortcut: chase TWO hops up the label forest
+        // (labels are always node ids, so the lookup always resolves;
+        // left joins guard the component-min's self-label anyway). Two
+        // chases per round quarter the remaining chain depth instead of
+        // halving it — measured on g5's sparse co-occurrence graph at
+        // sf0.1 (520 components, long thin trees): 19 rounds → 10, and
+        // every round is ~8 Spark jobs, so round count is the wall.
+        // Each chase is a V-row broadcast-sized lookup, far cheaper than
+        // a round. Skipped in round 1: initial labels are one-hop
+        // minima, so no label chains exist yet to compress —
+        // near-clique graphs (the common case, 2 rounds total) never
+        // pay for the extra joins.
+        val joined = labels.join(nbrMin, "id")
+        val withHop = if (iter == 0) joined.withColumn("hop_label",
+            lit(null).cast(joined.schema("label").dataType))
+          else {
+            val hop1 = joined.join(labels.select(col("id").as("hop_id"),
+              col("label").as("hop1_label")),
+              col("label") === col("hop_id"), "left").drop("hop_id")
+            hop1.join(labels.select(col("id").as("hop_id"),
+                col("label").as("hop2_label")),
+                col("hop1_label") === col("hop_id"), "left")
+              .select(hop1.columns.map(col) :+
+                least(col("hop1_label"), col("hop2_label"))
+                  .as("hop_label"): _*)
+              .drop("hop1_label")
+          }
+        // the convergence bit rides the checkpoint action as an observed
+        // metric (CollectMetrics), so each round is ONE job — the
+        // separate filter-isEmpty scan this replaces was a whole extra
+        // job per round (rounds × ~0.1 s of pure scheduling at sf0.1,
+        // and an extra pass over the vector at any scale)
+        val obs = new org.apache.spark.sql.Observation(s"cc_changed_$iter")
+        val next = materialize(withHop
+          .select(col("id"),
+            least(col("label"), col("nbr_label"), col("hop_label"))
+              .as("label"),
+            (least(col("nbr_label"), col("hop_label")) < col("label"))
+              .as("changed"))
+          .observe(obs, coalesce(sum(col("changed").cast("long")), lit(0L))
+            .as("n_changed")))
+        // round i-1's checkpointed vector is dead once round i is live
+        // (the pageRank release discipline)
+        release(labels)
+        labels = next.drop("changed")
+        converged = obs.get("n_changed").asInstanceOf[Long] == 0L
+        iter += 1
+      }
+      if (!converged) throw new IllegalStateException(
+        s"dupClusters did not converge in $maxIter rounds; the pair " +
+          "graph has a component of extreme diameter — raise maxIter " +
+          "(rounds grow only as log(diameter) under pointer-doubling)")
+      labels.select(col("id").as("member_id"), col("label").as("cluster_id"))
+    } finally {
+      sc.setJobDescription(null)
+      // the result reads only the last labels checkpoint, so the edges
+      // are dead either way; the labels outlive only a converged call
+      if (edges != null) release(edges)
+      if (!converged && labels != null) release(labels)
     }
-    sc.setJobDescription(null)
-    if (!converged) throw new IllegalStateException(
-      s"dupClusters did not converge in $maxIter rounds; the pair " +
-        "graph has a component of extreme diameter — raise maxIter " +
-        "(rounds grow only as log(diameter) under pointer-doubling)")
-    labels.select(col("id").as("member_id"), col("label").as("cluster_id"))
   }
 
   /** Incremental exact dedup: drop arriving documents whose content

@@ -100,14 +100,29 @@ object Iter {
     * on any other frame the leaf scan may be shared state this would
     * yank from under live frames. */
   def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-        l.rdd.getCheckpointFile.foreach { dir =>
-          val p = new org.apache.hadoop.fs.Path(dir)
-          p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-        }
-      case _ => ()
+    checkpoints(df).foreach(free(df, _))
+
+  /** [[release]] for the checkpoints an operator made for itself: frees
+    * those `out` reads that `in`, the operator's still-live input, does
+    * not. For an operator that returns a frame over its own checkpoint
+    * (`Curation.perplexityBuckets`), once the caller has materialized
+    * what it needed from `out`. */
+  def releaseOwn(out: DataFrame, in: DataFrame): Unit = {
+    val live = checkpoints(in).map(_.id).toSet
+    checkpoints(out).filterNot(r => live(r.id)).foreach(free(out, _))
+  }
+
+  private def checkpoints(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.distinctBy(_.id)
+
+  private def free(df: DataFrame, rdd: org.apache.spark.rdd.RDD[_]): Unit = {
+    rdd.unpersist(blocking = false)
+    rdd.getCheckpointFile.foreach { dir =>
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+        .delete(p, true)
     }
+  }
 }

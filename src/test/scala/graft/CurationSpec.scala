@@ -49,6 +49,33 @@ class CurationSpec extends AnyFunSuite {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("dupClusters keeps only the returned frame's checkpoint") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val before = sc.getPersistentRDDs.keySet
+    val out = Dedup.dupClusters(pairs, "id_a", "id_b")
+    // the edges and every superseded label vector are released; the
+    // labels the result reads stay until the caller releases them
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1)
+    assert(sc.getLocalProperty("spark.job.description") == null)
+    assert(out.collect().forall(_.getLong(1) == 0L))
+    graft.util.Iter.release(out)
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("dupClusters releases every checkpoint when it throws") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val before = sc.getPersistentRDDs.keySet
+    intercept[IllegalStateException] {
+      Dedup.dupClusters(pairs, "id_a", "id_b", maxIter = 1)
+    }
+    assert(sc.getPersistentRDDs.keySet == before)
+    assert(sc.getLocalProperty("spark.job.description") == null)
+  }
+
   test("dupClusters survives on reliable checkpoints when a dir is set") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("ckpt").toString
@@ -1010,6 +1037,22 @@ class CurationSpec extends AnyFunSuite {
       mn(org.apache.spark.sql.functions.when(col("bucket") === "tail",
         col("xent_e6"))).as("tmin")).collect()
     agg.foreach(r => assert(r.getLong(1) <= r.getLong(2), r.toString))
+  }
+
+  test("perplexityBuckets keeps only the returned frame's checkpoint") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val b = graft.operators.Curation.perplexityBuckets(
+      graft.util.Tables.documents(spark, sf), "doc_id", "text", "lang")
+    // the bigram frame the scores were built from is released; the
+    // scores' checkpoint is the one leaf of the result
+    val added = sc.getPersistentRDDs.keySet -- before
+    val leaves = b.queryExecution.analyzed.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    assert(added.size == 1 && added == leaves, s"$added vs $leaves")
+    graft.util.Iter.release(b)
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 
   test("knBigramScore matches a by-hand Kneser-Ney model; KN normalizes to 1") {
