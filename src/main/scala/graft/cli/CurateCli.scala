@@ -158,12 +158,9 @@ object CurateCli {
       langDropped: Long = 0L)
 
   /** The stage frames of one pipeline pass: survivors with their
-    * leak-safe split, and the per-document audit rows. Both read
-    * `checkpoints`; [[release]] frees them once neither is read again. */
-  case class Frames(curated: DataFrame, dropped: DataFrame,
-      checkpoints: Seq[DataFrame]) {
-    def release(): Unit = checkpoints.foreach(Iter.release)
-  }
+    * leak-safe split, and the per-document audit rows. Their two
+    * checkpoints pass to the caller's scope ([[Iter.scoped]]). */
+  case class Frames(curated: DataFrame, dropped: DataFrame)
 
   /** The audit stages, in pipeline order: the `stage` of a dropped row. */
   private val Stages = Seq("lang", "quality", "gopher", "ppl", "dsir",
@@ -191,17 +188,11 @@ object CurateCli {
       stripSpans: Boolean = false, stripKeepFirst: Boolean = false,
       gopher: Boolean = false, pplCut: Boolean = false,
       langAllow: Option[Set[String]] = None,
-      langMinHits: Int = 1): Frames = {
+      langMinHits: Int = 1): Frames = Iter.scoped { s =>
     // One verdict frame: every input document with `stage` and `reason`
     // null while it survives. Each stage computes its drops over the
     // live documents and marks them, so the first failing stage wins
     // and no document is ever in two places.
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mat(df: DataFrame): DataFrame = {
-      val m = Iter.materialize(df)
-      held += m
-      m
-    }
     def live(v: DataFrame): DataFrame = v.filter(col("stage").isNull)
     // a live document for which `drop` holds takes `stage` and `reason`
     def mark(v: DataFrame, stage: String, drop: Column,
@@ -216,134 +207,129 @@ object CurateCli {
           col("reason").as("d_reason")), Seq("doc_id"), "left"),
         stage, col("d_hit"), col("d_reason"))
         .drop("d_hit", "d_reason")
-    // an optional stage materializes its drop set: the frame it folds
-    // into stays one plan, and what `op` checkpointed for itself is
-    // dead once the drops are
+    // an optional stage materializes its drop set in a scope of its
+    // own: the frame it folds into stays one plan, and what `op`
+    // checkpointed for itself is freed once the drops are
     def optional(v: DataFrame, stage: String)(
-        op: DataFrame => DataFrame): DataFrame = {
-      val in = live(v)
-      val out = op(in)
-      val drops = mat(out)
-      Iter.releaseOwn(out, in)
-      fold(v, stage, drops)
+        op: DataFrame => DataFrame): DataFrame =
+      fold(v, stage, Iter.scoped(_.materialize(op(live(v)))))
+
+    var v = docs.select(docs.columns.map(col) ++ Seq(
+      lit(null).cast("string").as("stage"),
+      lit(null).cast("string").as("reason")): _*)
+
+    // 0. language allowlist (optional) — the FIRST cut: one narrow
+    // row-local filter (the t3 n-gram heuristic with e13's stopword
+    // confidence floor), the cheapest signal in the pipeline, and
+    // every downstream stage is language-bound. EXACTLY the
+    // streaming e13 gate's expression tree (IngestGate.langGate), so
+    // the batch stage and the ingest gate agree by construction; the
+    // audit reason carries the heuristic's verdict so "why was this
+    // dropped" names the detected language.
+    langAllow.foreach { langs =>
+      v = optional(v, "lang") { in =>
+        in.join(graft.streaming.IngestGate.langGate(in, langs, "text",
+            langMinHits).select(col("doc_id")), Seq("doc_id"), "left_anti")
+          .select(col("doc_id"), concat(lit("lang_"),
+            graft.functions.TextAnalysis.langId(
+              coalesce(col("text"), lit("")))).as("reason"))
+      }
     }
 
-    try {
-      var v = docs.select(docs.columns.map(col) ++ Seq(
-        lit(null).cast("string").as("stage"),
-        lit(null).cast("string").as("reason")): _*)
+    // 1. quality filter — the first failing x11 rule is the reason
+    v = fold(v, "quality", Curation.qualityFilter(live(v), "doc_id",
+        "text", minWords = minWords)
+      .filter(!col("keep")).select(col("doc_id"), col("reason")))
 
-      // 0. language allowlist (optional) — the FIRST cut: one narrow
-      // row-local filter (the t3 n-gram heuristic with e13's stopword
-      // confidence floor), the cheapest signal in the pipeline, and
-      // every downstream stage is language-bound. EXACTLY the
-      // streaming e13 gate's expression tree (IngestGate.langGate), so
-      // the batch stage and the ingest gate agree by construction; the
-      // audit reason carries the heuristic's verdict so "why was this
-      // dropped" names the detected language.
-      langAllow.foreach { langs =>
-        v = optional(v, "lang") { in =>
-          in.join(graft.streaming.IngestGate.langGate(in, langs, "text",
-              langMinHits).select(col("doc_id")), Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), concat(lit("lang_"),
-              graft.functions.TextAnalysis.langId(
-                coalesce(col("text"), lit("")))).as("reason"))
-        }
+    // 1.2 the Gopher rule battery (optional): the published
+    // web-scale heuristic set, entirely row-local, with the first
+    // failing rule as the per-document audit reason
+    if (gopher) v = optional(v, "gopher") { in =>
+      Curation.gopherRules(in, "doc_id", "text")
+        .filter(!col("keep")).select(col("doc_id"), col("reason"))
+    }
+
+    // 1.3 CCNet perplexity tail cut (optional): score the survivors
+    // with the corpus-trained KN model, keep each language's head
+    // and middle tertiles (Wenzek et al. 2020's `head+middle` recipe)
+    if (pplCut) v = optional(v, "ppl") { in =>
+      Curation.perplexityBuckets(in, "doc_id", "text", "lang")
+        .filter(col("bucket") === "tail")
+        .select(col("doc_id"), lit("tail_bucket").as("reason"))
+    }
+
+    // 1.5 DSIR importance resampling against the target corpus
+    // (optional): ds2's deterministic exp(logw−max) gate — the
+    // distribution-shaping stage between rules and dedup
+    dsirTarget.foreach { tgt =>
+      v = optional(v, "dsir") { in =>
+        Curation.dsirResample(in, tgt, "doc_id", "text")
+          .filter(!col("keep"))
+          .select(col("doc_id"), lit("importance_resample").as("reason"))
       }
+    }
 
-      // 1. quality filter — the first failing x11 rule is the reason
-      v = fold(v, "quality", Curation.qualityFilter(live(v), "doc_id",
-          "text", minWords = minWords)
-        .filter(!col("keep")).select(col("doc_id"), col("reason")))
+    // 2. exact dedup: the lowest live id per content hash survives —
+    // d1's rule as a window over the verdict frame, which it reads
+    // once, so the verdicts before it are computed once
+    v = mark(v.withColumn("canon",
+        min(when(col("stage").isNull, col("doc_id")))
+          .over(Window.partitionBy(md5(col("text"))))),
+      "exact_dup", col("doc_id") =!= col("canon"), lit("duplicate_text"))
+      .drop("canon")
+    // checkpoint 1 of 2: winnowing and the cluster survivors both
+    // read the exact-dedup survivors
+    val deduped = s.materialize(v)
 
-      // 1.2 the Gopher rule battery (optional): the published
-      // web-scale heuristic set, entirely row-local, with the first
-      // failing rule as the per-document audit reason
-      if (gopher) v = optional(v, "gopher") { in =>
-        Curation.gopherRules(in, "doc_id", "text")
-          .filter(!col("keep")).select(col("doc_id"), col("reason"))
-      }
+    // 3. near-dup span dedup: winnow pairs -> clusters -> longest
+    // wins. The clusters come back over their own checkpoint, which
+    // the leak-safe split reads again.
+    val kept2 = live(deduped)
+    val clusters = Dedup.dupClusters(
+      Dedup.winnowedDupPairs(kept2, "doc_id", "text"), "id_a", "id_b")
+    val keepIds = Dedup.clusterSurvivors(clusters, kept2,
+        "doc_id", "text")
+      .select(col("keep_id"))
+    v = fold(deduped, "near_dup", clusters
+      .join(keepIds, clusters("member_id") === keepIds("keep_id"),
+        "left_anti")
+      .select(col("member_id").as("doc_id"),
+        lit("duplicate_span").as("reason")))
 
-      // 1.3 CCNet perplexity tail cut (optional): score the survivors
-      // with the corpus-trained KN model, keep each language's head
-      // and middle tertiles (Wenzek et al. 2020's `head+middle` recipe)
-      if (pplCut) v = optional(v, "ppl") { in =>
-        Curation.perplexityBuckets(in, "doc_id", "text", "lang")
-          .filter(col("bucket") === "tail")
-          .select(col("doc_id"), lit("tail_bucket").as("reason"))
-      }
+    // 3.5 semantic dedup over the embeddings sidecar (optional):
+    // d15's cell-local pruning on the surviving docs' vectors
+    embeds.foreach { em =>
+      v = optional(v, "semantic_dup") { in => Iter.scoped { s =>
+        // the vector count rides the checkpoint action
+        val (vecs, n) = s.observed(em
+          .select(col("vec_id").cast("long").as("vec_id"),
+            col("embedding"))
+          .join(in.select(col("doc_id").as("vec_id")),
+            Seq("vec_id"), "left_semi"), Seq(count(lit(1)).as("n")))
+        val k = math.max(16L, n.getLong(0) / 100).toInt
+        val centroids: Array[Array[Float]] = vecs
+          .orderBy(col("vec_id")).limit(k)
+          .collect().map(_.getSeq[Float](1).toArray)
+        Dedup.semDedup(vecs, "vec_id", "embedding", centroids,
+            semanticTau)
+          .filter(!col("keep"))
+          .select(col("vec_id").as("doc_id"),
+            lit("semantic_duplicate").as("reason"))
+      }}
+    }
 
-      // 1.5 DSIR importance resampling against the target corpus
-      // (optional): ds2's deterministic exp(logw−max) gate — the
-      // distribution-shaping stage between rules and dedup
-      dsirTarget.foreach { tgt =>
-        v = optional(v, "dsir") { in =>
-          Curation.dsirResample(in, tgt, "doc_id", "text")
-            .filter(!col("keep"))
-            .select(col("doc_id"), lit("importance_resample").as("reason"))
-        }
-      }
-
-      // 2. exact dedup: the lowest live id per content hash survives —
-      // d1's rule as a window over the verdict frame, which it reads
-      // once, so the verdicts before it are computed once
-      v = mark(v.withColumn("canon",
-          min(when(col("stage").isNull, col("doc_id")))
-            .over(Window.partitionBy(md5(col("text"))))),
-        "exact_dup", col("doc_id") =!= col("canon"), lit("duplicate_text"))
-        .drop("canon")
-      // checkpoint 1 of 2: winnowing and the cluster survivors both
-      // read the exact-dedup survivors
-      val deduped = mat(v)
-
-      // 3. near-dup span dedup: winnow pairs -> clusters -> longest
-      // wins. The clusters come back over their own checkpoint, which
-      // the leak-safe split reads again.
-      val kept2 = live(deduped)
-      val clusters = Dedup.dupClusters(
-        Dedup.winnowedDupPairs(kept2, "doc_id", "text"), "id_a", "id_b")
-      held += clusters
-      val keepIds = Dedup.clusterSurvivors(clusters, kept2,
-          "doc_id", "text")
-        .select(col("keep_id"))
-      v = fold(deduped, "near_dup", clusters
-        .join(keepIds, clusters("member_id") === keepIds("keep_id"),
-          "left_anti")
-        .select(col("member_id").as("doc_id"),
-          lit("duplicate_span").as("reason")))
-
-      // 3.5 semantic dedup over the embeddings sidecar (optional):
-      // d15's cell-local pruning on the surviving docs' vectors
-      embeds.foreach { em =>
-        v = optional(v, "semantic_dup") { in =>
-          val vecs = mat(em
-            .select(col("vec_id").cast("long").as("vec_id"),
-              col("embedding"))
-            .join(in.select(col("doc_id").as("vec_id")),
-              Seq("vec_id"), "left_semi"))
-          val k = math.max(16L, vecs.count() / 100).toInt
-          val centroids: Array[Array[Float]] = vecs
-            .orderBy(col("vec_id")).limit(k)
-            .collect().map(_.getSeq[Float](1).toArray)
-          Dedup.semDedup(vecs, "vec_id", "embedding", centroids,
-              semanticTau)
-            .filter(!col("keep"))
-            .select(col("vec_id").as("doc_id"),
-              lit("semantic_duplicate").as("reason"))
-        }
-      }
-
-      // 3.8 corpus-wide duplicated-span stripping (optional): x18's
-      // rewrite over the deduped survivors — duplicated spans that
-      // outlived near-dup dedup as sub-document fragments are removed
-      // from the TEXT itself (RefinedWeb's span removal, applied after
-      // dedup so whole-document duplicates don't first shred each
-      // other); a doc stripped to nothing is dropped with an audit
-      // row, never shipped empty
-      val stripping = stripSpans || stripKeepFirst
-      if (stripping) {
+    // 3.8 corpus-wide duplicated-span stripping (optional): x18's
+    // rewrite over the deduped survivors — duplicated spans that
+    // outlived near-dup dedup as sub-document fragments are removed
+    // from the TEXT itself (RefinedWeb's span removal, applied after
+    // dedup so whole-document duplicates don't first shred each
+    // other); a doc stripped to nothing is dropped with an audit
+    // row, never shipped empty
+    val stripping = stripSpans || stripKeepFirst
+    if (stripping) {
+      val st = Iter.scoped { inner =>
         val in = live(v)
-        val out =
+        inner.materialize(
           if (stripKeepFirst)
             // x24's variant: exact keep-first spans — ONE canonical
             // copy of every duplicated run survives somewhere in the
@@ -356,52 +342,44 @@ object CurateCli {
           else
             Curation.stripDupSpans(in, "doc_id", "text")
               .select(col("doc_id"), col("clean_text").as("clean"),
-                (col("kept_tokens") === 0L).as("emptied"))
-        val st = mat(out)
-        Iter.releaseOwn(out, in)
-        val rewritten = v.join(st.select(col("doc_id"), col("clean")),
-            Seq("doc_id"), "left")
-          .select(v.columns.map {
-            case "text" => coalesce(col("clean"), col("text")).as("text")
-            case c => col(c)
-          }: _*)
-        v = fold(rewritten, "strip_spans", st.filter(col("emptied"))
-          .select(col("doc_id"), lit("fully_duplicated").as("reason")))
+                (col("kept_tokens") === 0L).as("emptied")))
       }
-
-      // 4. decontamination against the eval corpus (optional). The
-      // overlap is a per-document count, so it runs over the first
-      // survivor set that carries the final text: the exact-dedup
-      // checkpoint, unless the strip stage rewrote the text since.
-      eval.foreach { ev =>
-        v = fold(v, "decontaminate", Curation.contamination(
-            live(if (stripping) v else deduped), ev, "doc_id", "text")
-          .filter(col("n_overlap") >= maxOverlap)
-          .select(col("doc_id"), lit("eval_overlap").as("reason")))
-      }
-      // checkpoint 2 of 2: the curated and dropped frames both read it
-      val verdicts = mat(v)
-      // every other checkpoint of the pass is dead now
-      held.filterNot(h => (h eq verdicts) || (h eq clusters))
-        .foreach(Iter.release)
-
-      // 5. leakage-safe split over the SAME near-dup clusters
-      val kept = live(verdicts).drop("stage", "reason")
-      val split = Curation.leakSafeSplit(kept, "doc_id", clusters)
-        .select(col("doc_id"), col("split"))
-      Frames(
-        curated = kept.join(split, "doc_id"),
-        dropped = verdicts.filter(col("stage").isNotNull)
-          .select(col("doc_id"), col("stage"), col("reason")),
-        checkpoints = Seq(verdicts, clusters))
-    } catch {
-      case e: Throwable =>
-        held.foreach(Iter.release)
-        throw e
+      val rewritten = v.join(st.select(col("doc_id"), col("clean")),
+          Seq("doc_id"), "left")
+        .select(v.columns.map {
+          case "text" => coalesce(col("clean"), col("text")).as("text")
+          case c => col(c)
+        }: _*)
+      v = fold(rewritten, "strip_spans", st.filter(col("emptied"))
+        .select(col("doc_id"), lit("fully_duplicated").as("reason")))
     }
+
+    // 4. decontamination against the eval corpus (optional). The
+    // overlap is a per-document count, so it runs over the first
+    // survivor set that carries the final text: the exact-dedup
+    // checkpoint, unless the strip stage rewrote the text since.
+    eval.foreach { ev =>
+      v = fold(v, "decontaminate", Curation.contamination(
+          live(if (stripping) v else deduped), ev, "doc_id", "text")
+        .filter(col("n_overlap") >= maxOverlap)
+        .select(col("doc_id"), lit("eval_overlap").as("reason")))
+    }
+    // checkpoint 2 of 2: the curated and dropped frames both read
+    // it; every other checkpoint of the pass is freed when the
+    // scope exits
+    val verdicts = s.materialize(v)
+
+    // 5. leakage-safe split over the SAME near-dup clusters
+    val kept = live(verdicts).drop("stage", "reason")
+    val split = Curation.leakSafeSplit(kept, "doc_id", clusters)
+      .select(col("doc_id"), col("split"))
+    Frames(
+      curated = kept.join(split, "doc_id"),
+      dropped = verdicts.filter(col("stage").isNotNull)
+        .select(col("doc_id"), col("stage"), col("reason")))
   }
 
-  def run(spark: SparkSession, args: Args): Summary = {
+  def run(spark: SparkSession, args: Args): Summary = Iter.scoped { s =>
     graft.util.LocalFs.install(spark)
     val docs = graft.util.Tables.documents(spark, args.inputDir)
     // Every Summary count is an observed metric on an action the call
@@ -423,137 +401,126 @@ object CurateCli {
       stripKeepFirst = args.stripKeepFirst, gopher = args.gopher,
       pplCut = args.pplCut, langAllow = args.langAllow,
       langMinHits = args.langMinHits)
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // a frame is materialized only when a second action reads it
     def readTwice(df: DataFrame, twice: Boolean): DataFrame =
-      if (!twice) df
+      if (twice) s.materialize(df) else df
+    // 6. shard-numbered, split-partitioned write (x2's seeded
+    // layout; shard/pos join back on id so payload columns ride
+    // along)
+    val shards = Curation.shuffleShards(frames.curated, "doc_id",
+      args.shards, seed = "curate")
+    val curated = readTwice(frames.curated.join(shards, "doc_id"),
+      args.tarShards || args.packBudget > 0 || args.chunkLen > 0)
+    val curatedCounts = count(lit(1)).as("n") +:
+      Splits.map(s => count_if(col("split") === s).as(s))
+    curated.observe(curatedBy, curatedCounts.head, curatedCounts.tail: _*)
+      .write.mode("overwrite").partitionBy("split")
+      .parquet(s"${args.outputDir}/curated")
+    val dropped = readTwice(frames.dropped, args.distill)
+    val stageCounts = Stages.map(s => count_if(col("stage") === s).as(s))
+    dropped.observe(droppedBy, stageCounts.head, stageCounts.tail: _*)
+      .write.mode("overwrite").parquet(s"${args.outputDir}/dropped")
+    def longs(o: Observation): Map[String, Long] =
+      o.get.map { case (k, n) => k -> n.asInstanceOf[Long] }
+    val drops = longs(droppedBy)
+    val kept = longs(curatedBy)
+    // the non-empty splits, as a group-by over curated/ would list
+    val splits = Splits.map(s => s -> kept(s)).filter(_._2 > 0)
+
+    // optional delivery format: one tar shard set per split (x13's
+    // manifested sink — the layout trainers stream)
+    if (args.tarShards)
+      splits.foreach { case (sp, _) =>
+        graft.sources.TarShards.write(
+          curated.filter(col("split") === sp)
+            .select(col("doc_id").cast("string").as("name"),
+              encode(col("text"), "UTF-8").as("payload")),
+          "name", "payload", s"${args.outputDir}/shards/$sp",
+          nShards = args.shards)
+      }
+
+    // optional model distillation: train the lr1 classifier on the
+    // rule verdicts over the FULL input (keeps and drops both carry
+    // signal), write every document's score — the serving artifact
+    // the next ingest run's IngestGate.scoreGate ships as literals
+    val weights =
+      if (!args.distill) None
       else {
-        val m = Iter.materialize(df)
-        held += m
-        m
-      }
-    try {
-      // 6. shard-numbered, split-partitioned write (x2's seeded
-      // layout; shard/pos join back on id so payload columns ride
-      // along)
-      val shards = Curation.shuffleShards(frames.curated, "doc_id",
-        args.shards, seed = "curate")
-      val curated = readTwice(frames.curated.join(shards, "doc_id"),
-        args.tarShards || args.packBudget > 0 || args.chunkLen > 0)
-      val curatedCounts = count(lit(1)).as("n") +:
-        Splits.map(s => count_if(col("split") === s).as(s))
-      curated.observe(curatedBy, curatedCounts.head, curatedCounts.tail: _*)
-        .write.mode("overwrite").partitionBy("split")
-        .parquet(s"${args.outputDir}/curated")
-      val dropped = readTwice(frames.dropped, args.distill)
-      val stageCounts = Stages.map(s => count_if(col("stage") === s).as(s))
-      dropped.observe(droppedBy, stageCounts.head, stageCounts.tail: _*)
-        .write.mode("overwrite").parquet(s"${args.outputDir}/dropped")
-      def longs(o: Observation): Map[String, Long] =
-        o.get.map { case (k, n) => k -> n.asInstanceOf[Long] }
-      val drops = longs(droppedBy)
-      val kept = longs(curatedBy)
-      // the non-empty splits, as a group-by over curated/ would list
-      val splits = Splits.map(s => s -> kept(s)).filter(_._2 > 0)
-
-      // optional delivery format: one tar shard set per split (x13's
-      // manifested sink — the layout trainers stream)
-      if (args.tarShards)
-        splits.foreach { case (sp, _) =>
-          graft.sources.TarShards.write(
-            curated.filter(col("split") === sp)
-              .select(col("doc_id").cast("string").as("name"),
-                encode(col("text"), "UTF-8").as("payload")),
-            "name", "payload", s"${args.outputDir}/shards/$sp",
-            nShards = args.shards)
-        }
-
-      // optional model distillation: train the lr1 classifier on the
-      // rule verdicts over the FULL input (keeps and drops both carry
-      // signal), write every document's score — the serving artifact
-      // the next ingest run's IngestGate.scoreGate ships as literals
-      val weights =
-        if (!args.distill) None
-        else {
-          import graft.operators.LogReg
-          val t = coalesce(col("text"), lit(""))
-          val (f1, f2, f3) = LogReg.qualityFeatures(t, length(t))
-          // the stage-1 verdicts are already materialized in the audit
-          // frame — an anti-join against its quality drops beats
-          // re-running the regex-heavy rule pass over the full corpus
-          val qualityDrops = dropped
-            .filter(col("stage") === "quality").select(col("doc_id"))
-          val feats = docs
-            .join(qualityDrops.withColumn("q_drop", lit(true)),
-              Seq("doc_id"), "left")
-            .select(col("doc_id"), f1.as("f1"), f2.as("f2"), f3.as("f3"),
-              col("q_drop").isNull.cast("double").as("y"))
-            .filter(col("f1") > 0.0) // zero-token rows have NaN features
-          val fs = Seq("f1", "f2", "f3")
-          val w = LogReg.train(feats, "y", fs)
-          feats.select(col("doc_id"),
-              (LogReg.score(w, fs).cast("decimal(24,6)") *
-                lit(1000000L).cast("decimal(7,0)")).cast("bigint")
-                .as("score_e6"))
-            .write.mode("overwrite").parquet(s"${args.outputDir}/scores")
-          Some(w.toSeq)
-        }
-
-      // optional packed-payload delivery (l6): per split, the curated
-      // survivors next-fit-packed into strict token-budget rows — the
-      // trainer-ready payload, one exchange per split, the whole
-      // tokenize → curate → pack → write chain closed in one CLI run
-      if (args.packBudget > 0) {
-        val packable = curated.select(col("doc_id"), col("split"),
-          col("shard"), col("text"),
-          graft.functions.TextAnalysis.tokenCount(col("text"))
-            .cast("long").as("n_tok"))
-        splits.foreach { case (sp, _) =>
-          graft.operators.Layout.packPayloads(
-            packable.filter(col("split") === sp),
-            "doc_id", "n_tok", "text", "shard", args.packBudget)
-          .write.mode("overwrite")
-          .parquet(s"${args.outputDir}/packed/$sp")
-        }
+        import graft.operators.LogReg
+        val t = coalesce(col("text"), lit(""))
+        val (f1, f2, f3) = LogReg.qualityFeatures(t, length(t))
+        // the stage-1 verdicts are already materialized in the audit
+        // frame — an anti-join against its quality drops beats
+        // re-running the regex-heavy rule pass over the full corpus
+        val qualityDrops = dropped
+          .filter(col("stage") === "quality").select(col("doc_id"))
+        val feats = docs
+          .join(qualityDrops.withColumn("q_drop", lit(true)),
+            Seq("doc_id"), "left")
+          .select(col("doc_id"), f1.as("f1"), f2.as("f2"), f3.as("f3"),
+            col("q_drop").isNull.cast("double").as("y"))
+          .filter(col("f1") > 0.0) // zero-token rows have NaN features
+        val fs = Seq("f1", "f2", "f3")
+        val w = LogReg.train(feats, "y", fs)
+        feats.select(col("doc_id"),
+            (LogReg.score(w, fs).cast("decimal(24,6)") *
+              lit(1000000L).cast("decimal(7,0)")).cast("bigint")
+              .as("score_e6"))
+          .write.mode("overwrite").parquet(s"${args.outputDir}/scores")
+        Some(w.toSeq)
       }
 
-      // optional concat-and-chunk manifests (x15): per split, every
-      // document's token-range in the (shard, doc_id)-ordered virtual
-      // stream — the shuffled pack order a trainer consumes
-      if (args.chunkLen > 0) {
-        val counted = curated.select(col("doc_id"), col("split"),
-          col("shard"),
-          size(org.apache.spark.sql.functions.filter(
-            split(trim(col("text")), "\\s+"), w => w =!= ""))
-            .cast("bigint").as("n_tok"))
-        splits.foreach { case (sp, _) =>
-          Curation.concatChunkOffsets(
-            counted.filter(col("split") === sp), "doc_id", "n_tok",
-            col("shard"), args.chunkLen)
-          .write.mode("overwrite")
-          .parquet(s"${args.outputDir}/chunks/$sp")
-        }
+    // optional packed-payload delivery (l6): per split, the curated
+    // survivors next-fit-packed into strict token-budget rows — the
+    // trainer-ready payload, one exchange per split, the whole
+    // tokenize → curate → pack → write chain closed in one CLI run
+    if (args.packBudget > 0) {
+      val packable = curated.select(col("doc_id"), col("split"),
+        col("shard"), col("text"),
+        graft.functions.TextAnalysis.tokenCount(col("text"))
+          .cast("long").as("n_tok"))
+      splits.foreach { case (sp, _) =>
+        graft.operators.Layout.packPayloads(
+          packable.filter(col("split") === sp),
+          "doc_id", "n_tok", "text", "shard", args.packBudget)
+        .write.mode("overwrite")
+        .parquet(s"${args.outputDir}/packed/$sp")
       }
-
-      Summary(
-        input = longs(read)("n"),
-        lowQuality = drops("quality"),
-        exactDups = drops("exact_dup"),
-        nearDups = drops("near_dup"),
-        semanticDups = drops("semantic_dup"),
-        contaminated = drops("decontaminate"),
-        curated = kept("n"),
-        distillWeights = weights,
-        dsirDropped = drops("dsir"),
-        strippedEmpty = drops("strip_spans"),
-        gopherDropped = drops("gopher"),
-        pplTailDropped = drops("ppl"),
-        langDropped = drops("lang"),
-        splits = splits.toMap)
-    } finally {
-      held.foreach(Iter.release)
-      frames.release()
     }
+
+    // optional concat-and-chunk manifests (x15): per split, every
+    // document's token-range in the (shard, doc_id)-ordered virtual
+    // stream — the shuffled pack order a trainer consumes
+    if (args.chunkLen > 0) {
+      val counted = curated.select(col("doc_id"), col("split"),
+        col("shard"),
+        size(org.apache.spark.sql.functions.filter(
+          split(trim(col("text")), "\\s+"), w => w =!= ""))
+          .cast("bigint").as("n_tok"))
+      splits.foreach { case (sp, _) =>
+        Curation.concatChunkOffsets(
+          counted.filter(col("split") === sp), "doc_id", "n_tok",
+          col("shard"), args.chunkLen)
+        .write.mode("overwrite")
+        .parquet(s"${args.outputDir}/chunks/$sp")
+      }
+    }
+
+    Summary(
+      input = longs(read)("n"),
+      lowQuality = drops("quality"),
+      exactDups = drops("exact_dup"),
+      nearDups = drops("near_dup"),
+      semanticDups = drops("semantic_dup"),
+      contaminated = drops("decontaminate"),
+      curated = kept("n"),
+      distillWeights = weights,
+      dsirDropped = drops("dsir"),
+      strippedEmpty = drops("strip_spans"),
+      gopherDropped = drops("gopher"),
+      pplTailDropped = drops("ppl"),
+      langDropped = drops("lang"),
+      splits = splits.toMap)
   }
 
   def main(argv: Array[String]): Unit = {

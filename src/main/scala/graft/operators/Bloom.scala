@@ -48,25 +48,6 @@ object Bloom {
     df.select(GraftColumns.column(agg).as("bf")).first().getAs[Array[Byte]](0)
   }
 
-  /** [[keyBloom]] for an EXPENSIVELY-DERIVED key frame (a corpus
-    * winnow/band-key explode): the frame is checkpointed once with its
-    * count riding the checkpoint action as an observed metric, the
-    * filter builds from the checkpoint, and the blocks are released —
-    * two jobs and ONE derivation where the plain path derived the keys
-    * twice (count + build), three with a caller-side count.
-    * @return (filter bytes, exact key count). */
-  def keyBloomMaterialized(df: DataFrame, keyCol: String,
-      fpp: Double = 0.01): (Array[Byte], Long) = {
-    val obs = new org.apache.spark.sql.Observation()
-    val mat = graft.util.Iter.materialize(
-      df.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n")))
-    try {
-      val n = obs.get("n").asInstanceOf[Long]
-      (keyBloom(mat, keyCol, fpp, knownCount = n), n)
-    } finally graft.util.Iter.release(mat)
-  }
-
   /** `might_contain` probe of `key` against a pre-built filter literal. */
   def mightContain(bloom: Array[Byte], key: Column): Column =
     GraftColumns.column(BloomFilterMightContain(

@@ -98,10 +98,10 @@ object Bpe {
   /** The shared merge loop over a (c, syms) word table — see
     * [[bpeMerges]] for the semantics and determinism contract. */
   private def mergeRounds(words0: DataFrame,
-      numMerges: Int): DataFrame = {
+      numMerges: Int): DataFrame = Iter.scoped { s =>
     val spark = words0.sparkSession
     import spark.implicits._
-    var words = Iter.materialize(words0)
+    var words = s.materialize(words0)
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var k = 1
     var exhausted = false
@@ -121,18 +121,17 @@ object Bpe {
         val (l, r, n) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((k, l, r, n))
-        val next = Iter.materialize(
+        val next = s.materialize(
           words.select(col("c"),
             mergeFold(col("syms"), l, r, l + r).as("syms")))
         // drop the prior round's checkpointed copy once the new one is
         // live — a real training run is thousands of merges, and
         // without the release storage grows linearly with numMerges
-        Iter.release(words)
+        s.release(words)
         words = next
         k += 1
       }
     }
-    Iter.release(words)
     merges.toSeq.toDF("rank", "left", "right", "n")
   }
 
@@ -205,11 +204,11 @@ object Bpe {
     *         final-round weighted count, lp its ln-probability. */
   def unigramTrain(df: DataFrame, textCol: String,
       vocabSize: Int = 1000, seedSize: Int = 4000, rounds: Int = 2,
-      maxPieceLen: Int = 8): DataFrame = {
+      maxPieceLen: Int = 8): DataFrame = Iter.scoped { s =>
     require(vocabSize >= 1 && seedSize >= 1 && rounds >= 1)
     val spark = df.sparkSession
     import spark.implicits._
-    val words = Iter.materialize(
+    val words = s.materialize(
       df.select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
         .filter(col("w") =!= "")
         .groupBy(col("w")).agg(count(lit(1)).as("c")))
@@ -261,7 +260,6 @@ object Bpe {
     model = mStep(eStep(model))
 
     val finalUsage = eStep(model).toMap
-    Iter.release(words)
     model.toSeq.sortBy(_._1)
       .map { case (p, lp) => (p, finalUsage.getOrElse(p, 0L), lp) }
       .toDF("piece", "usage", "lp")
@@ -304,13 +302,13 @@ object Bpe {
   def unigramTrainSoft(df: DataFrame, textCol: String,
       vocabSize: Int = 1000, seedSize: Int = 4000, rounds: Int = 2,
       maxPieceLen: Int = 8, pruneSampleRate: Double = 1.0,
-      sampleSeed: String = "unigram-prune"): DataFrame = {
+      sampleSeed: String = "unigram-prune"): DataFrame = Iter.scoped { s =>
     require(vocabSize >= 1 && seedSize >= 1 && rounds >= 1)
     require(pruneSampleRate > 0 && pruneSampleRate <= 1,
       s"pruneSampleRate must be in (0,1], got $pruneSampleRate")
     val spark = df.sparkSession
     import spark.implicits._
-    val words = Iter.materialize(
+    val words = s.materialize(
       df.select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
         .filter(col("w") =!= "")
         .groupBy(col("w")).agg(count(lit(1)).as("c")))
@@ -372,7 +370,6 @@ object Bpe {
     model = mStep(expectations(model))
 
     val finalE = expectations(model).toMap
-    Iter.release(words)
     model.toSeq.sortBy(_._1)
       .map { case (p, lp) => (p, finalE.getOrElse(p, 0.0), lp) }
       .toDF("piece", "usage", "lp")
@@ -545,11 +542,11 @@ object Bpe {
     *         counts corpus-weighted, score exported as
     *         floor(score·1e12) per the e-cut convention. */
   def wordpieceMerges(df: DataFrame, textCol: String,
-      numMerges: Int): DataFrame = {
+      numMerges: Int): DataFrame = Iter.scoped { s =>
     require(numMerges >= 1, "numMerges must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
-    var words = Iter.materialize(
+    var words = s.materialize(
       wordFreq(df, textCol).select(col("c"), wordpieceSyms.as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer[
       (Int, String, String, String, Long, Long, Long, Long)]()
@@ -584,15 +581,14 @@ object Bpe {
         val merged = wpMerged(l, r)
         merges += ((k, l, r, merged, n, ul, ur,
           math.floor(score * 1e12).toLong))
-        val next = Iter.materialize(
+        val next = s.materialize(
           words.select(col("c"),
             mergeFold(col("syms"), l, r, merged).as("syms")))
-        Iter.release(words)
+        s.release(words)
         words = next
         k += 1
       }
     }
-    Iter.release(words)
     merges.toSeq.toDF("rank", "left", "right", "merged", "n",
       "ul", "ur", "score_e12")
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Iter
+
 /** Corpus-curation operators for training-data pipelines: deterministic
   * stratified sampling, seeded global shuffle into shards, train/eval
   * n-gram decontamination and corpus n-gram frequency.
@@ -354,16 +356,16 @@ object Curation {
     * pure per-row arithmetic — two tiny shuffles regardless of corpus
     * size. Returns (strataCol, n_docs, n_tokens, share, rate). */
   def mixtureWeights(df: DataFrame, strataCol: String, textCol: String,
-      alpha: Double = 0.5, scale: Double = 1e9): DataFrame = {
+      alpha: Double = 0.5,
+      scale: Double = 1e9): DataFrame = Iter.scoped { s =>
     // one corpus scan: the totals and max self-joins below would each
     // re-run the scan+agg per branch on the un-materialized plan
-    val perStratum = df
+    val perStratum = s.materialize(df
       .select(col(strataCol),
         graft.functions.TextAnalysis.tokenCount(col(textCol))
           .cast("long").as("tk"))
       .groupBy(col(strataCol))
-      .agg(count(lit(1)).as("n_docs"), sum(col("tk")).as("n_tokens"))
-      .transform(graft.util.Iter.materialize)
+      .agg(count(lit(1)).as("n_docs"), sum(col("tk")).as("n_tokens")))
     // sqrt is IEEE-exact everywhere; pow(x, a) may differ by an ulp
     // between libm implementations, so the default temperature gets
     // the exact path (the fixed-point floor then absorbs sub-ulp
@@ -898,7 +900,7 @@ object Curation {
     * xent ≤ p33 → head, ≤ p67 → middle, else tail (documents AT a
     * threshold take the better bucket). */
   def perplexityBuckets(df: DataFrame, idCol: String, textCol: String,
-      langCol: String): DataFrame = {
+      langCol: String): DataFrame = Iter.scoped { s =>
     // NULL languages coalesce to '' so those documents are bucketed
     // within their own stratum instead of silently vanishing through
     // the groupBy/join (the no-rows-vanish convention).
@@ -907,16 +909,13 @@ object Curation {
     // would run twice (measured: 22.5 s vs t13's 15.5 s at sf10 was
     // mostly this). So is the per-document bigram frame it is scored
     // from, which feeds both the model and the scoring join; it is
-    // dead, and released, once the scores are checkpointed. `lang`
+    // dead once the scores are checkpointed (the scope frees it). `lang`
     // rides knScore's own reattach join (guide §1.2): the former
     // separate id-keyed join of the scored frame against a THIRD
     // corpus scan is gone from the plan.
-    import graft.util.Iter.{materialize, release}
-    val db = materialize(knDocBigrams(df, idCol, textCol))
-    val scored =
-      try materialize(knScore(df, db, idCol, KnDiscount,
-        carry = Seq("lang" -> coalesce(col(langCol), lit("")))))
-      finally release(db)
+    val db = s.materialize(knDocBigrams(df, idCol, textCol))
+    val scored = s.materialize(knScore(df, db, idCol, KnDiscount,
+      carry = Seq("lang" -> coalesce(col(langCol), lit("")))))
     val cuts = scored.groupBy(col("lang"))
       .agg(
         percentile(col("xent_e6"), lit(1.0 / 3)).as("p33"),
@@ -1548,17 +1547,17 @@ object Curation {
     // build runs twice). The global min rides the checkpoint action
     // as an observed metric (the dupClusters convergence trick), so
     // it costs no separate job re-scanning the model.
-    val obsMin = new org.apache.spark.sql.Observation("kn_ln_unseen")
-    val p = graft.util.Iter.materialize(
-      knModel(knDocBigrams(df, idCol, textCol), discount)
-        .observe(obsMin, min(col("lnp")).as("mn")))
-    val top = p.orderBy(col("cb").desc, col("w1"), col("w2"))
-      .limit(topN)
-      .select(col("w1"), col("w2"), col("lnp"))
-      .collect() // bounded: topN rows of gate-model state
+    val (top, mn) = Iter.scoped { s =>
+      val (p, m) = s.observed(
+        knModel(knDocBigrams(df, idCol, textCol), discount),
+        Seq(min(col("lnp")).as("mn")))
+      (p.orderBy(col("cb").desc, col("w1"), col("w2"))
+        .limit(topN)
+        .select(col("w1"), col("w2"), col("lnp"))
+        .collect(), m) // bounded: topN rows of gate-model state
+    }
     require(top.nonEmpty, "knGateModel: corpus has no bigrams")
-    val lnUnseen = obsMin.get("mn").asInstanceOf[Double]
-    graft.util.Iter.release(p)
+    val lnUnseen = mn.getDouble(0)
     val m = KnGateModel(Map.empty, lnUnseen, discount)
     m.copy(bigrams = top.map(r =>
       m.key(r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap)
@@ -1751,7 +1750,8 @@ object Curation {
         sum(col("c").cast("double") * col("lr")).as("logw"))
 
   def dsirScores(raw: DataFrame, target: DataFrame, idCol: String,
-      textCol: String, buckets: Int = 256, gram: Int = 1): DataFrame = {
+      textCol: String, buckets: Int = 256,
+      gram: Int = 1): DataFrame = Iter.scoped { s =>
     require(buckets > 0 && gram > 0, "need buckets > 0 and gram > 0")
     // gram > 1: space-joined sliding windows (the DSIR paper defaults
     // to bigrams); documents with fewer than `gram` tokens contribute
@@ -1768,11 +1768,11 @@ object Curation {
     // the checkpoint adds no new scale ceiling. The target side is
     // featurized once (its B-row count frame is materialized before
     // the totals action re-runs it).
-    val rawB = graft.util.Iter.materialize(
+    val rawB = s.materialize(
       dsirBucketed(raw, textCol, buckets, gram, col(idCol))
         .groupBy(col(idCol), col("b"))
         .agg(count(lit(1)).as("c")))
-    val tc = graft.util.Iter.materialize(
+    val tc = s.materialize(
       dsirBucketed(target, textCol, buckets, gram)
         .groupBy(col("b")).agg(count(lit(1)).as("tc")))
     val ratio = dsirRatioFromCounts(
@@ -1793,12 +1793,12 @@ object Curation {
     * over the score frame (bounded driver state). */
   def dsirResample(raw: DataFrame, target: DataFrame, idCol: String,
       textCol: String, buckets: Int = 256,
-      seed: String = "dsir"): DataFrame = {
+      seed: String = "dsir"): DataFrame = Iter.scoped { s =>
     // materialized: the score frame feeds the max action AND the final
     // keep/drop projection — left live, the scoring join and doc-keyed
     // aggregation would run twice (the perplexityBuckets lesson; the
     // frame is three narrow columns per raw document)
-    val scores = graft.util.Iter.materialize(
+    val scores = s.materialize(
       dsirScores(raw, target, idCol, textCol, buckets))
     val mx = scores.agg(max(col("logw"))).first().getDouble(0)
     scores.select(col(idCol), col("n_tok"),
@@ -1820,9 +1820,9 @@ object Curation {
 
   def dsirModel(raw: DataFrame, target: DataFrame, idCol: String,
       textCol: String, buckets: Int = 256, gram: Int = 1,
-      seed: String = "dsir"): DsirModel = {
+      seed: String = "dsir"): DsirModel = Iter.scoped { s =>
     require(buckets > 0 && gram > 0, "need buckets > 0 and gram > 0")
-    val ratio = graft.util.Iter.materialize(
+    val ratio = s.materialize(
       dsirRatio(raw, target, textCol, buckets, gram))
     val mx = dsirScoreWith(ratio = ratio, raw = raw, idCol = idCol,
         textCol = textCol, buckets = buckets, gram = gram)

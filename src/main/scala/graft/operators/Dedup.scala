@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
+import graft.util.Iter
 
 /** Document deduplication for large-scale training-data pipelines:
   * exact (content-hash), MinHash+LSH near-dup, SimHash fingerprints and
@@ -422,10 +423,10 @@ object Dedup {
     * does not grow with iterations (the classic iterative-DataFrame
     * trap). Sessions with a checkpoint dir get reliable
     * `checkpoint()` (survives executor loss mid-loop); others get
-    * `localCheckpoint()` — [[graft.util.Iter.materialize]]. Every
-    * checkpoint but the returned frame's own is released before the
-    * call returns or throws; the caller releases that one
-    * ([[graft.util.Iter.release]]) when done with the clusters.
+    * `localCheckpoint()` — [[graft.util.Iter.Scope.materialize]]. Every
+    * checkpoint but the returned frame's own is freed before the call
+    * returns or throws; that one passes to the caller's scope
+    * ([[Iter.scoped]]), which frees it once done with the clusters.
     *
     * @param pairs near-dup pairs, one row per undirected edge
     * @return (member_id, cluster_id): one row per distinct node,
@@ -441,19 +442,17 @@ object Dedup {
     // here and then again in every propagation round. The pairs are
     // tiny relative to the corpus that produced them; the pipeline is
     // not.
-    import graft.util.Iter.{materialize, release}
     val sc = pairs.sparkSession.sparkContext
-    var edges, labels: DataFrame = null
-    var converged = false
-    try {
+    try Iter.scoped { s =>
       sc.setJobDescription("cc: edges")
-      edges = materialize(
+      val edges = s.materialize(
         pairs.select(col(aCol).as("a"), col(bCol).as("b")))
       val sym = edges.select(col("a").as("id"), col("b").as("nbr"))
         .union(edges.select(col("b").as("id"), col("a").as("nbr")))
       sc.setJobDescription("cc: init labels")
-      labels = materialize(sym.groupBy("id")
+      var labels = s.materialize(sym.groupBy("id")
         .agg(least(min(col("nbr")), first(col("id"))).as("label")))
+      var converged = false
       var iter = 0
       while (!converged && iter < maxIter) {
         sc.setJobDescription(s"cc: round $iter")
@@ -496,34 +495,30 @@ object Dedup {
         // separate filter-isEmpty scan this replaces was a whole extra
         // job per round (rounds × ~0.1 s of pure scheduling at sf0.1,
         // and an extra pass over the vector at any scale)
-        val obs = new org.apache.spark.sql.Observation(s"cc_changed_$iter")
-        val next = materialize(withHop
+        val (next, changed) = s.observed(withHop
           .select(col("id"),
             least(col("label"), col("nbr_label"), col("hop_label"))
               .as("label"),
             (least(col("nbr_label"), col("hop_label")) < col("label"))
-              .as("changed"))
-          .observe(obs, coalesce(sum(col("changed").cast("long")), lit(0L))
+              .as("changed")),
+          Seq(coalesce(sum(col("changed").cast("long")), lit(0L))
             .as("n_changed")))
         // round i-1's checkpointed vector is dead once round i is live
         // (the pageRank release discipline)
-        release(labels)
+        s.release(labels)
         labels = next.drop("changed")
-        converged = obs.get("n_changed").asInstanceOf[Long] == 0L
+        converged = changed.getLong(0) == 0L
         iter += 1
       }
       if (!converged) throw new IllegalStateException(
         s"dupClusters did not converge in $maxIter rounds; the pair " +
           "graph has a component of extreme diameter — raise maxIter " +
           "(rounds grow only as log(diameter) under pointer-doubling)")
+      // the result reads only the last labels checkpoint, so the scope
+      // frees the edges either way; the labels outlive only a
+      // converged call
       labels.select(col("id").as("member_id"), col("label").as("cluster_id"))
-    } finally {
-      sc.setJobDescription(null)
-      // the result reads only the last labels checkpoint, so the edges
-      // are dead either way; the labels outlive only a converged call
-      if (edges != null) release(edges)
-      if (!converged && labels != null) release(labels)
-    }
+    } finally sc.setJobDescription(null)
   }
 
   /** Incremental exact dedup: drop arriving documents whose content
@@ -918,8 +913,8 @@ object Dedup {
   }
 
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, threshold: Double = 0.8,
-      maxPosting: Int = 1024, denseCut: Int = 64): DataFrame = {
+      k: Int = 3, threshold: Double = 0.8, maxPosting: Int = 1024,
+      denseCut: Int = 64): DataFrame = Iter.scoped { s =>
     graft.functions.ShinglesImpl.register(df.sparkSession)
     // materialized: the hash-set frame feeds the posting explode AND
     // the final per-doc set-size join — left live, the shingling +
@@ -930,7 +925,7 @@ object Dedup {
     // the whole shingle+md5 pass as ONE task AND leaves the checkpoint
     // single-partitioned, so every downstream stage starts serial
     // (measured at sf0.1: a 0.84 s one-task checkpoint stage).
-    val sets = graft.util.Iter.materialize(
+    val sets = s.materialize(
       graft.util.Tables.fanOut(
           df.select(col(idCol).as("id"), col(textCol).as("text")), "id")
         .withColumn("shs", array_distinct(expr(s"word_shingles(text, $k)")))

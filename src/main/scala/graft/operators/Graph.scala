@@ -17,32 +17,27 @@ import graft.util.Iter
   * static edge side across rounds once it is materialized) plus one
   * dst-keyed partial-aggregated shuffle whose output is one row per
   * NODE, not per edge. Ranks are materialized per round
-  * ([[graft.util.Iter.materialize]]) to cut lineage growth — the
+  * ([[graft.util.Iter.Scope.materialize]]) to cut lineage growth — the
   * d7 lesson: an unmaterialized loop re-executes every prior round per
   * reference and its plan grows quadratically.
   */
 object Graph {
 
   /** The per-run static state every round rejoins. `dangling` is only
-    * built when the caller's variant reads it (redistribution). */
+    * built when the caller's variant reads it (redistribution). Its
+    * checkpoints pass to the caller's scope, which frees them once the
+    * final rank vector no longer depends on them. */
   private[graft] case class Ctx(nodes: DataFrame, n: Long, contrib: DataFrame,
-      dangling: Option[DataFrame]) {
-    /** Free the checkpointed static frames once the final rank vector
-      * is materialized — it no longer depends on them. */
-    def release(): Unit = {
-      Iter.release(nodes); Iter.release(contrib)
-      dangling.foreach(Iter.release)
-    }
-  }
+      dangling: Option[DataFrame])
 
   private[graft] def prepare(edges: DataFrame, srcCol: String,
-      dstCol: String, needDangling: Boolean = true): Ctx = {
+      dstCol: String, needDangling: Boolean = true): Ctx = Iter.scoped { s =>
     // materialized FIRST: nodes, deg, contrib and dangling all derive
     // from the edge frame, and an un-materialized `e` would re-run
     // the caller's edge construction (often a join) once per derived
-    // frame — four scans where one suffices. Released before return:
-    // the derived frames are checkpoints of their own.
-    val e = Iter.materialize(
+    // frame — four scans where one suffices. Freed when this scope
+    // exits: the derived frames are checkpoints of their own.
+    val e = s.materialize(
       edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst")))
     // materialized like contrib: the node set is referenced in every
@@ -54,30 +49,27 @@ object Graph {
     // the node count rides the clustering checkpoint as an observed
     // metric — the separate count() job this replaces re-scanned the
     // freshly checkpointed node set once per invocation
-    val obsN = new org.apache.spark.sql.Observation("pr_n_nodes")
-    val nodes = Iter.materializeClustered(
+    val (nodes, nRow) = s.observed(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
-        .distinct()
-        .observe(obsN, count(lit(1)).as("n")), Seq("node"))
-    val n = obsN.get("n").asInstanceOf[Long]
+        .distinct(), Seq(count(lit(1)).as("n")), clusterBy = Seq("node"))
+    val n = nRow.getLong(0)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // static per-round payload: (src, dst, deg) — materialized ONCE,
     // hash-clustered on src with the layout DECLARED on the
-    // checkpoint scan (Iter.materializeClustered), so every round's
+    // checkpoint scan (materialize's clusterBy), so every round's
     // edge⋈rank join sees the edge side already placed on the join
     // key and only the rank vector moves: the per-round cost
     // collapses to one V-row rank exchange plus the dst-keyed
     // partial-agg shuffle — the edge table, the 100 TB side, never
     // moves again (plan-gated in PlanAuditSpec; measured at sf10 in
     // BENCH_NOTES).
-    val contrib = Iter.materializeClustered(e.join(deg, "src"), Seq("src"))
+    val contrib = s.materialize(e.join(deg, "src"), clusterBy = Seq("src"))
     // only the redistribution variant reads the dangling set — the
     // leaky default (g1) was paying this checkpoint chain for nothing
-    val dangling = if (!needDangling) None else Some(Iter.materialize(
+    val dangling = if (!needDangling) None else Some(s.materialize(
       nodes.join(e.select(col("src").as("node")).distinct(),
         Seq("node"), "left_anti")))
-    Iter.release(e)
     Ctx(nodes, n, contrib, dangling)
   }
 
@@ -116,7 +108,7 @@ object Graph {
               lit(damping) * col("__dm") / lit(ctx.n.toDouble)) +
               lit(damping) * coalesce(col("inb"), lit(0.0))).as("rank"))
       }
-    Iter.materialize(updated)
+    Iter.scoped(_.materialize(updated))
   }
 
   /** Damped PageRank after exactly `iters` power-iteration rounds.
@@ -147,8 +139,8 @@ object Graph {
     * three facts (mass conservation, converged order equality, value
     * difference) on a dangling-heavy graph.
     *
-    * The node count `n` is ONE count() pre-job (parquet-metadata cheap
-    * for the common case), the same contract as d6's geometry count.
+    * The node count `n` rides the node checkpoint as an observed
+    * metric, so it costs no job of its own.
     *
     * @return (node, rank) — rank a plain double; callers cut to
     *         decimal for cross-engine comparison. */
@@ -156,20 +148,21 @@ object Graph {
       iters: Int, damping: Double = 0.85,
       redistributeDangling: Boolean = false): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
-    val ctx = prepare(edges, srcCol, dstCol,
-      needDangling = redistributeDangling)
-    var ranks = ctx.nodes.select(col("node"),
-      lit(1.0 / ctx.n).as("rank"))
-    for (i <- 1 to iters) {
-      val next = round(ctx, ranks, damping, redistributeDangling)
-      // round i-1's checkpointed vector is dead once round i is live —
-      // without the release a long run pins one rank copy per round
-      // (i == 1 skips: the initial vector is a view over ctx.nodes)
-      if (i > 1) Iter.release(ranks)
-      ranks = next
+    Iter.scoped { s =>
+      val ctx = prepare(edges, srcCol, dstCol,
+        needDangling = redistributeDangling)
+      var ranks = ctx.nodes.select(col("node"),
+        lit(1.0 / ctx.n).as("rank"))
+      for (i <- 1 to iters) {
+        val next = round(ctx, ranks, damping, redistributeDangling)
+        // round i-1's checkpointed vector is dead once round i is live —
+        // without the release a long run pins one rank copy per round
+        // (i == 1 skips: the initial vector is a view over ctx.nodes)
+        if (i > 1) s.release(ranks)
+        ranks = next
+      }
+      ranks
     }
-    if (iters >= 1) ctx.release()
-    ranks
   }
 
   /** Iterate-until-converged PageRank: rounds run until the L∞ rank
@@ -190,25 +183,28 @@ object Graph {
       tol: Double = 1e-6, maxIter: Int = 100, damping: Double = 0.85,
       redistributeDangling: Boolean = false): (DataFrame, Int) = {
     require(tol > 0 && maxIter >= 1)
-    val ctx = prepare(edges, srcCol, dstCol,
-      needDangling = redistributeDangling)
-    var ranks = Iter.materialize(ctx.nodes.select(col("node"),
-      lit(1.0 / ctx.n).as("rank")))
-    var it = 0
-    while (it < maxIter) {
-      val next = round(ctx, ranks, damping, redistributeDangling)
-      it += 1
-      val delta = next.as("a").join(ranks.as("b"), "node")
-        .agg(max(abs(col("a.rank") - col("b.rank")))).first().getDouble(0)
-      // the previous vector is dead once the delta is taken — release
-      // it, or a slow-mixing graph pins maxIter copies of the ranks
-      Iter.release(ranks)
-      ranks = next
-      if (delta < tol) { ctx.release(); return (ranks, it) }
+    Iter.scoped { s =>
+      val ctx = prepare(edges, srcCol, dstCol,
+        needDangling = redistributeDangling)
+      var ranks = s.materialize(ctx.nodes.select(col("node"),
+        lit(1.0 / ctx.n).as("rank")))
+      var it = 0
+      var converged = false
+      while (!converged && it < maxIter) {
+        val next = round(ctx, ranks, damping, redistributeDangling)
+        it += 1
+        val delta = next.as("a").join(ranks.as("b"), "node")
+          .agg(max(abs(col("a.rank") - col("b.rank")))).first().getDouble(0)
+        // the previous vector is dead once the delta is taken — release
+        // it, or a slow-mixing graph pins maxIter copies of the ranks
+        s.release(ranks)
+        ranks = next
+        converged = delta < tol
+      }
+      if (!converged) throw new IllegalStateException(
+        s"pageRank did not converge to $tol within $maxIter rounds")
+      (ranks, it)
     }
-    ctx.release()
-    throw new IllegalStateException(
-      s"pageRank did not converge to $tol within $maxIter rounds")
   }
 
   /** Exact TRIANGLE COUNT of the undirected simple graph spanned by
@@ -237,12 +233,12 @@ object Graph {
     * numerator — with the global count = Σ/3.
     */
   def triangleCount(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
+      dstCol: String): DataFrame = Iter.scoped { s =>
     // materialized: e feeds the degree pass (twice via unionAll), the
     // orientation join, and the final node list — left live, an
     // expensive upstream edge construction (g3's lineitem self-join)
     // re-runs ~5x per action (the pageRank prepare lesson)
-    val e = Iter.materialize(edges
+    val e = s.materialize(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
@@ -256,7 +252,7 @@ object Graph {
     // oriented exactly tip₁ → tip₂ (ordering tips by raw id instead
     // would probe the wrong direction whenever id order disagrees
     // with degree order — e.g. a hub with a larger id than its rim)
-    val oriented = Iter.materialize(e
+    val oriented = s.materialize(e
       .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
       .select(
@@ -320,7 +316,7 @@ object Graph {
     *         est_triangles = floor(sampled/p³)). */
   def triangleCountApprox(edges: DataFrame, srcCol: String,
       dstCol: String, p: Double,
-      seed: String = "doulion"): DataFrame = {
+      seed: String = "doulion"): DataFrame = Iter.scoped { s =>
     require(p > 0 && p <= 1, s"p must be in (0,1], got $p")
     // the edge coin is an integer gate on [0, 10000) — quantize p
     // ONCE and derive BOTH the draw threshold and the 1/p³ scale-up
@@ -336,10 +332,10 @@ object Graph {
     // own eager materialization would re-derive it — including
     // whatever join produced `edges` upstream) AND the sampled_edges
     // count — two executions of the full canonicalize+hash-gate scan
-    // where one suffices (the pageRank-prepare lesson). Released once
-    // both consumers have run: triangleCount checkpoints its own
-    // derived frames eagerly, so nothing downstream re-reads this one.
-    val e = Iter.materialize(edges
+    // where one suffices (the pageRank-prepare lesson). Freed when the
+    // scope exits: triangleCount checkpoints its own derived frames
+    // eagerly, so nothing downstream re-reads this one.
+    val e = s.materialize(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
@@ -348,7 +344,6 @@ object Graph {
         concat_ws("-", col("a"), col("b"))) < lit(q)))
     val tri = triangleCount(e, "a", "b")
     val edgeCount = e.count()
-    Iter.release(e)
     tri.agg(coalesce((sum(col("n_triangles")) / 3).cast("bigint"),
         lit(0L)).as("sampled_triangles"))
       .select(lit(edgeCount).as("sampled_edges"),
@@ -408,7 +403,7 @@ object Graph {
     * @return (node, core_deg) — the k-core's members with their
     *         degree INSIDE the core. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, peels: Int = 12): DataFrame = {
+      k: Int, peels: Int = 12): DataFrame = Iter.scoped { s =>
     require(k >= 1, s"k must be >= 1, got $k")
     require(peels >= 1, s"peels must be >= 1, got $peels")
     val canon = edges
@@ -416,32 +411,30 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    val sym = Iter.materialize(
+    val sym = s.materialize(
       canon.select(col("a").as("src"), col("b").as("dst"))
         .union(canon.select(col("b").as("src"), col("a").as("dst"))))
     // survivor counts ride each checkpoint action as observed metrics
     // (the dupClusters convergence trick): one job per peel instead of
     // two — the separate count() was a full extra job per round
-    val obs0 = new org.apache.spark.sql.Observation("kcore_n_init")
-    var surv = Iter.materialize(
-      sym.select(col("src").as("node")).distinct()
-        .observe(obs0, count(lit(1)).as("n")))
-    var survN = obs0.get("n").asInstanceOf[Long]
+    def n = Seq(count(lit(1)).as("n"))
+    val (surv0, n0) = s.observed(
+      sym.select(col("src").as("node")).distinct(), n)
+    var surv = surv0
+    var survN = n0.getLong(0)
     var done = false
     var i = 0
     while (i < peels && !done) {
-      val obs = new org.apache.spark.sql.Observation(s"kcore_n_$i")
-      val next = Iter.materialize(
+      val (next, nextRow) = s.observed(
         sym.join(surv.select(col("node").as("src")), Seq("src"))
           .join(surv.select(col("node").as("dst")), Seq("dst"))
           .groupBy(col("src")).agg(count(lit(1)).as("d"))
           .filter(col("d") >= k)
-          .select(col("src").as("node"))
-          .observe(obs, count(lit(1)).as("n")))
-      val nextN = obs.get("n").asInstanceOf[Long]
+          .select(col("src").as("node")), n)
+      val nextN = nextRow.getLong(0)
       // next ⊆ surv always, so equal counts mean equal sets
       if (nextN == survN) done = true
-      Iter.release(surv)
+      s.release(surv)
       surv = next
       survN = nextN
       i += 1

@@ -162,12 +162,12 @@ object MultimodalQueries {
     // the row exercises keeps AND drops) shares
     // a dHash band key within Hamming 16. The oracle replays m8's
     // decode→dHash→banding→Hamming machinery across the split.
-    "e9_phash_gate" -> ((s, d) => {
+    "e9_phash_gate" -> ((s, d) => graft.util.Iter.scoped { scope =>
       // materialized: the render→PNG→decode→dHash pass (the expensive
       // per-row work) feeds the lake key collection AND the batch
       // projection, each its own action inside the gate — left live it
       // runs 3x; the checkpoint is (media_id, phash), 16 bytes/row
-      val all = graft.util.Iter.materialize(
+      val all = scope.materialize(
         Multimodal.imagePhash(Multimodal.syntheticVariantImages(s, d)))
       graft.streaming.IngestGate.phashGateExact(
         all.filter(col("media_id") % 5 === 0),
@@ -185,11 +185,11 @@ object MultimodalQueries {
     // deterministic and at fpp = 1e-6 no false positive flips a
     // verdict on this corpus, so a driver mismatch is a real gate
     // regression, not Bloom noise.
-    "e7_phash_gate" -> ((s, d) => {
+    "e7_phash_gate" -> ((s, d) => graft.util.Iter.scoped { scope =>
       // materialized for the same reason as e9: the gate's key count,
       // Bloom build, and batch projection are three actions over the
       // same expensive image-derivation frame
-      val all = graft.util.Iter.materialize(
+      val all = scope.materialize(
         Multimodal.imagePhash(Multimodal.syntheticVariantImages(s, d)))
       graft.streaming.IngestGate.phashGate(
         all.filter(col("media_id") % 5 === 0),

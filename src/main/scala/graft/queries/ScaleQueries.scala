@@ -909,7 +909,7 @@ object ScaleQueries {
     // relative-error verdict as a column the oracle replays
     // bit-for-bit — the gate is a hash, not a coin, so the estimate
     // is a fixed fact of the corpus).
-    "g4_triangle_estimate" -> ((s, d) => {
+    "g4_triangle_estimate" -> ((s, d) => graft.util.Iter.scoped { scope =>
       val li = Tables.lineitem(s, d)
         .filter(col("l_orderkey") % 10 === 0)
         .select(col("l_orderkey"), col("l_suppkey"))
@@ -918,7 +918,7 @@ object ScaleQueries {
       // the checkpoint instead of re-running the join (the g4
       // double-derivation finding from the r14 verdict, fixed at the
       // sharing point)
-      val e = graft.util.Iter.materialize(
+      val e = scope.materialize(
         li.as("a").join(li.as("b"),
             col("a.l_orderkey") === col("b.l_orderkey") &&
               col("a.l_suppkey") < col("b.l_suppkey"))

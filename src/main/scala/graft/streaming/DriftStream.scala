@@ -68,7 +68,7 @@ object DriftStream extends Serializable {
     * corpus-independent. */
   def psiGateBatch(events: DataFrame, bucketCol: String,
       batchCol: String, nBuckets: Int,
-      psiThreshold: Double): DataFrame = {
+      psiThreshold: Double): DataFrame = graft.util.Iter.scoped { s =>
     require(nBuckets > 0, "need nBuckets > 0")
     val spark = events.sparkSession
     val ev = events.select(col(batchCol).cast("long").as("batch"),
@@ -78,7 +78,7 @@ object DriftStream extends Serializable {
     // materialized: totals, the reference histogram, and the grid all
     // derive from it (the g4/e15 single-derivation lesson); the frame
     // is histogram-sized (≤ nBuckets·B rows), left checkpointed
-    val bc = graft.util.Iter.materialize(
+    val bc = s.materialize(
       ev.groupBy(col("batch"), col("bucket"))
         .agg(count(lit(1)).as("n")))
     val totals = bc.groupBy(col("batch")).agg(sum(col("n")).as("tot"))

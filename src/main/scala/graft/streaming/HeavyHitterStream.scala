@@ -102,7 +102,7 @@ object HeavyHitterStream extends Serializable {
     * release while the caller still holds the result). */
   def heavyHittersBatch(events: DataFrame, keyCol: String,
       batchCol: String, d: Int, w: Int, thetaPermille: Int,
-      seed: String): DataFrame = {
+      seed: String): DataFrame = graft.util.Iter.scoped { s =>
     require(d >= 1 && w >= 2, s"need d >= 1, w >= 2; got d=$d w=$w")
     require(thetaPermille >= 1 && thetaPermille <= 1000,
       s"thetaPermille in [1,1000], got $thetaPermille")
@@ -110,7 +110,7 @@ object HeavyHitterStream extends Serializable {
       col(keyCol).cast("string").as("key"))
     // d (j, cell) pairs per event in ONE scan, collapsed to
     // per-(epoch, key) counts in the single corpus-sized exchange
-    val kc = graft.util.Iter.materialize(
+    val kc = s.materialize(
       ev.select(col("batch"), col("key"),
           explode(array((0 until d).map(j =>
             struct(lit(j).as("j"),

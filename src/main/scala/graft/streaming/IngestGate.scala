@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Bloom
+import graft.util.Iter
 
 /** Streaming ingest gate for duplicate-SPAN filtering — the
   * Structured-Streaming form of [[graft.operators.Dedup.incrementalWinnowNew]]
@@ -47,7 +48,10 @@ object IngestGate {
     graft.functions.WinnowImpl.register(stream.sparkSession)
     // materialized build: the corpus fingerprint derivation (a full
     // winnow explode) runs once, not twice (count + filter aggregate)
-    val (bloom, _) = Bloom.keyBloomMaterialized(corpusFps, "fp", fpp)
+    val bloom = Iter.scoped { s =>
+      val (keys, n) = s.observed(corpusFps, Seq(count(lit(1)).as("n")))
+      Bloom.keyBloom(keys, "fp", fpp, knownCount = n.getLong(0))
+    }
     stream
       .withColumn("__matched",
         size(filter(fps(textCol, k, w), x => Bloom.mightContain(bloom, x))))
@@ -92,14 +96,19 @@ object IngestGate {
       .distinct()
     // one materialized build: the key count rides the checkpoint as an
     // observed metric and sizes the filter — the band explode+distinct
-    // previously ran three times (gate count, keyBloom count, build)
-    val (bloom, nKeys) = Bloom.keyBloomMaterialized(keys, "key", fpp)
-    val capacity = bands.toDouble * math.pow(2, 64.0 / bands)
-    require(nKeys <= maxSaturation * capacity,
-      f"phashGate: lake fills ${nKeys / capacity}%.3f of the " +
-        f"$bands-band key space (cap $maxSaturation%.3f) — the " +
-        "candidate gate would reject unrelated images; use " +
-        "phashGateExact or the batch pair path for lakes this size")
+    // previously ran three times (gate count, keyBloom count, build);
+    // an over-full lake is refused before the build is paid for
+    val bloom = Iter.scoped { s =>
+      val (mat, n) = s.observed(keys, Seq(count(lit(1)).as("n")))
+      val nKeys = n.getLong(0)
+      val capacity = bands.toDouble * math.pow(2, 64.0 / bands)
+      require(nKeys <= maxSaturation * capacity,
+        f"phashGate: lake fills ${nKeys / capacity}%.3f of the " +
+          f"$bands-band key space (cap $maxSaturation%.3f) — the " +
+          "candidate gate would reject unrelated images; use " +
+          "phashGateExact or the batch pair path for lakes this size")
+      Bloom.keyBloom(mat, "key", fpp, knownCount = nKeys)
+    }
     hashes
       .withColumn("__matched",
         size(filter(Dedup.bandKeys64(col(hashCol), bands),
@@ -544,13 +553,11 @@ object IngestGate {
     * gate-sized by contract — the gate collects it wholesale), so
     * the rewrite never reads a location it just deleted. */
   def compactEmbedGateIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, targetBytes: Long = 128L << 20): Unit = {
-    val compacted = graft.util.Iter.materialize(
-      graft.operators.Layout.compactToSize(spark.table(table),
-        targetBytes))
+      table: String, targetBytes: Long = 128L << 20): Unit = Iter.scoped { s =>
+    val compacted = s.materialize(graft.operators.Layout.compactToSize(
+      spark.table(table), targetBytes))
     graft.operators.Bucketing.dropTableAndLocation(spark, table)
     compacted.write.mode("overwrite").saveAsTable(table)
-    graft.util.Iter.release(compacted)
   }
 
   /** [[embedGate]] against a [[writeEmbedGateIndex]] table —

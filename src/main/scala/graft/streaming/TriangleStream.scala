@@ -94,18 +94,18 @@ object TriangleStream extends Serializable {
     * edges ([[Graph.triangleCount]]'s oriented pass, O(m^1.5) on the
     * RESERVOIR, independent of stream length). */
   def triangleEstimateReservoir(edges: DataFrame, srcCol: String,
-      dstCol: String, m: Int, seed: String = "triest"): DataFrame = {
+      dstCol: String, m: Int,
+      seed: String = "triest"): DataFrame = Iter.scoped { s =>
     require(m >= 3, s"reservoir must hold >= 3 edges, got $m")
     // materialized: the canonical edge set feeds the seen count AND
     // the reservoir selection (the g4 single-derivation lesson)
-    val canon = Iter.materialize(
+    val canon = s.materialize(
       canonical(edges, srcCol, dstCol).distinct())
     val t = canon.count()
     val res = canon.select(col("a"), col("b"), priority(seed).as("pr"))
       .orderBy(col("pr"), col("a"), col("b")).limit(m)
       .select(col("a"), col("b"))
     val tri = Graph.triangleCount(res, "a", "b")
-    Iter.release(canon)
     tri.agg(coalesce((sum(col("n_triangles")) / 3).cast("bigint"),
         lit(0L)).as("sampled_triangles"))
       .select(lit(t).as("seen_edges"),

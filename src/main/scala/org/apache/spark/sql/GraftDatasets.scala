@@ -6,73 +6,56 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Checkpoint-metadata bridge (same-package accessor, the
-  * [[GraftColumns]] pattern): `Dataset.checkpoint`/`localCheckpoint`
-  * returns a `LogicalRDD` with `UnknownPartitioning`, so an iterative
-  * algorithm that carefully repartitioned its static table before the
-  * checkpoint cut still pays a full re-shuffle of that table every
-  * round — Catalyst has no way to know the blocks are already hash
-  * placed. This re-declares what the caller just made physically true.
+  * [[GraftColumns]] pattern): re-declares on a checkpoint's leaf what
+  * the caller just made true of its blocks, and Catalyst cannot know.
   */
 object GraftDatasets {
 
-  /** Rebuild a checkpoint-backed frame with its REAL clustering
-    * declared: hash-partitioned on `keys` across the RDD's own
-    * partition count, sorted within partitions when `sorted`. The
-    * caller must have made that layout true before materializing
-    * (explicit `repartition(n, keys)` — which AQE never coalesces —
-    * plus `sortWithinPartitions`); declaring a layout the blocks do
-    * not have silently corrupts every co-partitioned join and
-    * aggregation downstream. Frames whose plan is not a single
-    * checkpoint scan are returned unchanged. */
-  def declareClustered(df: DataFrame, keys: Seq[String],
-      sorted: Boolean): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    ds.queryExecution.analyzed match {
-      case lr: LogicalRDD =>
-        val attrs = keys.map(k => lr.output.find(_.name == k).getOrElse(
-          throw new IllegalArgumentException(
-            s"declareClustered: no column '$k' in ${lr.output.map(_.name)}")))
-        val part = HashPartitioning(attrs, lr.rdd.getNumPartitions)
-        val ord =
-          if (sorted) attrs.map(a => SortOrder(a, Ascending)) else Nil
-        // Carry the checkpoint's statistics forward: `stats = None`
-        // makes the rebuilt leaf report defaultSizeInBytes (Long.Max),
-        // which silently disqualifies every downstream broadcast join
-        // over this frame — the planner falls back to sort-merge joins
-        // of frames that are kilobytes (measured on the CC label loop:
-        // 4.8 s → 348 s of executor time at sf0.1). The incoming frame
-        // is a checkpoint leaf, so .stats IS its recorded stats.
-        val st = ds.queryExecution.optimizedPlan.stats
-        classic.Dataset.ofRows(ds.sparkSession,
-          LogicalRDD(lr.output, lr.rdd, part, ord, lr.isStreaming,
-            lr.stream)(ds.sparkSession, Some(st), None))
-      case _ => df
-    }
-  }
-
-  /** Rebuild a checkpoint-backed frame with MEASURED statistics.
+  /** Rebuild a checkpoint-backed frame with MEASURED statistics and,
+    * given `clusterBy`, its REAL clustering.
     *
-    * `Dataset.checkpoint`/`localCheckpoint` records the checkpointed
-    * query's ESTIMATED stats as the new leaf's stats. Inside an
-    * iterative algorithm that estimate compounds: round i's plan joins
-    * round i−1's checkpoint with itself (size estimates MULTIPLY at
-    * joins), so the recorded sizeInBytes grows as a tower of exponents
-    * — by round ~15 of a connected-components loop Catalyst is
-    * multiplying BigIntegers with millions of digits inside
+    * Statistics: `Dataset.checkpoint`/`localCheckpoint` records the
+    * checkpointed query's ESTIMATED stats as the new leaf's stats.
+    * Inside an iterative algorithm that estimate compounds: round i's
+    * plan joins round i−1's checkpoint with itself (size estimates
+    * MULTIPLY at joins), so the recorded sizeInBytes grows as a tower
+    * of exponents — by round ~15 of a connected-components loop
+    * Catalyst is multiplying BigIntegers with millions of digits inside
     * SizeInBytesOnlyStatsPlanVisitor and the driver appears hung in
     * planning (observed live: a 3-join round plan stuck >10 min in
     * Statistics.product). Replacing the estimate with the blocks'
     * measured byte size keeps every round's planning O(plan) AND gives
     * the planner truth to pick broadcast joins with — the
-    * scale-adaptive behavior (guide §3.1) estimates cannot provide. */
-  def declareStats(df: DataFrame, sizeInBytes: BigInt): DataFrame = {
+    * scale-adaptive behavior (guide §3.1) estimates cannot provide.
+    *
+    * Clustering: a checkpoint comes back with `UnknownPartitioning`,
+    * so an iterative algorithm that carefully repartitioned its static
+    * table before the checkpoint cut still pays a full re-shuffle of
+    * that table every round. With `clusterBy` the leaf declares hash
+    * partitioning on those columns across the RDD's own partition
+    * count, sorted within partitions. The caller must have made that
+    * layout true before materializing (explicit `repartition(n, keys)`
+    * — which AQE never coalesces — plus `sortWithinPartitions`);
+    * declaring a layout the blocks do not have silently corrupts every
+    * co-partitioned join and aggregation downstream.
+    *
+    * Frames whose plan is not a single checkpoint scan are returned
+    * unchanged. */
+  def declare(df: DataFrame, sizeInBytes: BigInt,
+      clusterBy: Seq[String]): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     ds.queryExecution.analyzed match {
       case lr: LogicalRDD =>
+        val attrs = clusterBy.map(k => lr.output.find(_.name == k).getOrElse(
+          throw new IllegalArgumentException(
+            s"declare: no column '$k' in ${lr.output.map(_.name)}")))
+        val (part, ord) =
+          if (attrs.isEmpty) (lr.outputPartitioning, lr.outputOrdering)
+          else (HashPartitioning(attrs, lr.rdd.getNumPartitions),
+            attrs.map(a => SortOrder(a, Ascending)))
         classic.Dataset.ofRows(ds.sparkSession,
-          LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
-            lr.outputOrdering, lr.isStreaming, lr.stream)(
-            ds.sparkSession, Some(Statistics(sizeInBytes)), None))
+          LogicalRDD(lr.output, lr.rdd, part, ord, lr.isStreaming,
+            lr.stream)(ds.sparkSession, Some(Statistics(sizeInBytes)), None))
       case _ => df
     }
   }

@@ -57,11 +57,16 @@ class BloomSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("keyBloomMaterialized releases its checkpoint when the build throws") {
+  test("a scoped key checkpoint is released when the Bloom build throws") {
     val empty = spark.range(10).filter(col("id") < 0).toDF("k")
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    // the key side is materialized, then keyBloom's n > 0 check throws
-    intercept[IllegalArgumentException](Bloom.keyBloomMaterialized(empty, "k"))
+    // the key side is materialized with its count observed, then
+    // keyBloom's n > 0 check throws inside the scope
+    intercept[IllegalArgumentException](graft.util.Iter.scoped { s =>
+      val (keys, n) = s.observed(empty,
+        Seq(org.apache.spark.sql.functions.count(lit(1)).as("n")))
+      Bloom.keyBloom(keys, "k", knownCount = n.getLong(0))
+    })
     assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
   }
 }

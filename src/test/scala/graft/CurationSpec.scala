@@ -54,13 +54,14 @@ class CurationSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val before = sc.getPersistentRDDs.keySet
-    val out = Dedup.dupClusters(pairs, "id_a", "id_b")
-    // the edges and every superseded label vector are released; the
-    // labels the result reads stay until the caller releases them
-    assert((sc.getPersistentRDDs.keySet -- before).size == 1)
-    assert(sc.getLocalProperty("spark.job.description") == null)
-    assert(out.collect().forall(_.getLong(1) == 0L))
-    graft.util.Iter.release(out)
+    graft.util.Iter.scoped { _ =>
+      val out = Dedup.dupClusters(pairs, "id_a", "id_b")
+      // the edges and every superseded label vector are released; the
+      // labels the result reads stay until the caller's scope exits
+      assert((sc.getPersistentRDDs.keySet -- before).size == 1)
+      assert(sc.getLocalProperty("spark.job.description") == null)
+      assert(out.collect().forall(_.getLong(1) == 0L))
+    }
     assert(sc.getPersistentRDDs.keySet == before)
   }
 
@@ -1042,16 +1043,17 @@ class CurationSpec extends AnyFunSuite {
   test("perplexityBuckets keeps only the returned frame's checkpoint") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val b = graft.operators.Curation.perplexityBuckets(
-      graft.util.Tables.documents(spark, sf), "doc_id", "text", "lang")
-    // the bigram frame the scores were built from is released; the
-    // scores' checkpoint is the one leaf of the result
-    val added = sc.getPersistentRDDs.keySet -- before
-    val leaves = b.queryExecution.analyzed.collectLeaves().collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.toSet
-    assert(added.size == 1 && added == leaves, s"$added vs $leaves")
-    graft.util.Iter.release(b)
+    graft.util.Iter.scoped { _ =>
+      val b = graft.operators.Curation.perplexityBuckets(
+        graft.util.Tables.documents(spark, sf), "doc_id", "text", "lang")
+      // the bigram frame the scores were built from is released; the
+      // scores' checkpoint is the one leaf of the result
+      val added = sc.getPersistentRDDs.keySet -- before
+      val leaves = b.queryExecution.analyzed.collectLeaves().collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+      assert(added.size == 1 && added == leaves, s"$added vs $leaves")
+    }
     assert(sc.getPersistentRDDs.keySet == before)
   }
 

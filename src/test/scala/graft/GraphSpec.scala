@@ -13,28 +13,28 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
   }
 
-  test("materializeClustered declares the layout it physically made") {
+  test("materialize with clusterBy declares the layout it physically made") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, count => cnt, sum}
     // keys deliberately adversarial for hash placement: negatives,
     // zero, dense and sparse ranges
     val df = (-500L until 500L).map(k => (k, k * 3)).toDF("k", "v")
-    val m = graft.util.Iter.materializeClustered(df, Seq("k"))
-    // every key lands in exactly ONE partition under the declared
-    // partitioning: a key-grouped count over the clustered frame must
-    // agree with the plain frame (a wrong declaration would split
-    // groups across partitions and double-count keys)
-    assert(m.groupBy(col("k")).agg(cnt(org.apache.spark.sql.functions.lit(1)))
-      .count() == 1000)
-    assert(m.agg(sum(col("v"))).first().getLong(0) ==
-      df.agg(sum(col("v"))).first().getLong(0))
-    // a self-equi-join through the declared layout returns every key
-    // exactly once (co-partitioning honored on both sides)
-    val m2 = graft.util.Iter.materializeClustered(
-      df.select(col("k"), (col("v") * 2).as("w")), Seq("k"))
-    assert(m.join(m2, "k").count() == 1000)
-    graft.util.Iter.release(m)
-    graft.util.Iter.release(m2)
+    graft.util.Iter.scoped { s =>
+      val m = s.materialize(df, clusterBy = Seq("k"))
+      // every key lands in exactly ONE partition under the declared
+      // partitioning: a key-grouped count over the clustered frame must
+      // agree with the plain frame (a wrong declaration would split
+      // groups across partitions and double-count keys)
+      assert(m.groupBy(col("k"))
+        .agg(cnt(org.apache.spark.sql.functions.lit(1))).count() == 1000)
+      assert(m.agg(sum(col("v"))).first().getLong(0) ==
+        df.agg(sum(col("v"))).first().getLong(0))
+      // a self-equi-join through the declared layout returns every key
+      // exactly once (co-partitioning honored on both sides)
+      val m2 = s.materialize(
+        df.select(col("k"), (col("v") * 2).as("w")), clusterBy = Seq("k"))
+      assert(m.join(m2, "k").count() == 1000)
+    }
   }
 
   test("pageRank: zero iterations is the uniform vector") {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The iterative-loop stats contract (guide §3.1 + §5): every frame
-  * out of `Iter.materialize` must carry MEASURED statistics, read
+  * out of a scope's `materialize` must carry MEASURED statistics, read
   * synchronously from the block-manager master — never the
   * listener-lagged storage listing, never the checkpointed query's
   * compounding estimate. The join shapes the plan gates assert (x12
@@ -31,13 +31,14 @@ class IterStatsSpec extends AnyFunSuite {
 
   test("materialize declares measured stats, small frames stay broadcastable") {
     import spark.implicits._
-    val mat = graft.util.Iter.materialize((1 to 100).toDF("v"))
-    val size = mat.queryExecution.optimizedPlan.stats.sizeInBytes
-    // measured bytes: strictly positive, far below the 1 TiB fallback
-    // and the Long.Max default — i.e. the planner may broadcast it
-    assert(size > 0 && size < BigInt(10) * 1024 * 1024,
-      s"expected measured kilobytes, got $size")
-    graft.util.Iter.release(mat)
+    graft.util.Iter.scoped { s =>
+      val mat = s.materialize((1 to 100).toDF("v"))
+      val size = mat.queryExecution.optimizedPlan.stats.sizeInBytes
+      // measured bytes: strictly positive, far below the 1 TiB fallback
+      // and the Long.Max default — i.e. the planner may broadcast it
+      assert(size > 0 && size < BigInt(10) * 1024 * 1024,
+        s"expected measured kilobytes, got $size")
+    }
   }
 
   test("fallback stat is finite and non-broadcastable, never the estimate") {

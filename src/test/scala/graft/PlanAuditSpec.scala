@@ -546,7 +546,7 @@ class PlanAuditSpec extends AnyFunSuite {
       0.85, redistributeDangling = false)
     // the steady-state (round-2+) plan, pre-AQE: the edge and node
     // checkpoints DECLARE their hash clustering
-    // (Iter.materializeClustered), so EnsureRequirements plans NO
+    // (materialize with clusterBy), so EnsureRequirements plans NO
     // exchange and NO sort over either ExistingRDD scan — per round
     // only the V-row rank vector exchanges (once into the edge join,
     // once as the dst-keyed partial agg); the E-row edge table never

@@ -923,6 +923,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("phashGateExact"))
   }
 
+  test("phash ingest gate: a saturated lake is refused before the Bloom build") {
+    import graft.operators.Dedup
+    import graft.streaming.IngestGate
+    import org.apache.spark.TestBus
+    val sc = spark.sparkContext
+    val lake = spark.range(1000)
+      .select(xxhash64(col("id")).as("phash"))
+    val arriving = spark.range(5)
+      .select(col("id").as("media_id"), xxhash64(col("id") + 77).as("phash"))
+    // the jobs of the gate's key checkpoint alone, count observed
+    val keyJobs = TestBus.jobs(sc) {
+      graft.util.Iter.scoped(_.observed(
+        lake.select(explode(Dedup.bandKeys64(col("phash"), 4)).as("key"))
+          .distinct(), Seq(count(lit(1)).as("n"))))
+    }
+    val before = sc.getPersistentRDDs.keySet
+    // the key count rides the key checkpoint, and the saturation check
+    // reads it before any Bloom aggregate is built
+    val jobs = TestBus.jobs(sc) {
+      intercept[IllegalArgumentException](IngestGate.phashGate(arriving, lake))
+    }
+    assert(keyJobs.nonEmpty)
+    assert(jobs.size == keyJobs.size,
+      "a refused lake runs the key checkpoint's jobs and no Bloom " +
+        jobs.mkString("aggregate:\n", "\n", ""))
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("phash exact gate: survivors == batch band-collision + Hamming cut, saturation-immune") {
     import graft.operators.Dedup
     import graft.streaming.IngestGate

@@ -1,8 +1,10 @@
 package org.apache.spark
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.storage.BlockId
 
-/** Specs that count listener events: `listenerBus.waitUntilEmpty` is
+/** Specs that count listener events or storage blocks:
+  * `listenerBus.waitUntilEmpty` and the block-manager master are
   * Spark-internal. */
 object TestBus {
 
@@ -23,4 +25,29 @@ object TestBus {
     } finally sc.removeSparkListener(listener)
     seen.toArray(Array.empty[(Int, Long)]).toSeq
   }
+
+  /** Runs `body` and returns, in start order, the call sites of every
+    * job it started (each job's stage names, e.g. "first at
+    * Bloom.scala:48", space-joined). Jobs `body` started before it
+    * threw are counted too. */
+  def jobs(sc: SparkContext)(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(e.stageInfos.map(_.name).mkString(" "))
+    }
+    sc.listenerBus.waitUntilEmpty()
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      sc.listenerBus.waitUntilEmpty()
+      sc.removeSparkListener(listener)
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  /** Every RDD block the block managers hold right now. */
+  def rddBlocks(sc: SparkContext): Set[BlockId] =
+    sc.env.blockManager.master
+      .getMatchingBlockIds(_.isRDD, askStorageEndpoints = true).toSet
 }
